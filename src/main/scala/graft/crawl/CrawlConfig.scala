@@ -20,22 +20,17 @@ final case class CrawlConfig(
   /** Expected insertions per bloom shard (sized for the tier). */
   bloomShardCapacity: Long = 200000L,
   bloomFpp: Double = 0.01,
-  /** Bloom prefilter before the exact anti-join (J1 two-phase). */
-  useBloom: Boolean = true,
   /** Approximate-membership filter kind for the seen shards:
     * "bloom" (default) or "cuckoo" (deletion support, better space at
-    * low FPP) — the north-star's "bloom/cuckoo" pair. */
+    * low FPP) — the north-star's "bloom/cuckoo" pair. Every round probes
+    * the shards before the exact anti-join (J1 two-phase dedup). */
   seenFilter: String = "bloom",
-  /** Use the skew-safe two-phase scheduler (explicit salting path). */
-  saltedScheduler: Boolean = true,
   /** Robots filter as a Dataset join (RobotsJoin) instead of the
     * broadcast codegen expression — the web-scale path when the rule
     * table outgrows task serialization (10^7+ hosts). Identical crawl
-    * (tested); costs one extra frontier shuffle per round. */
+    * (tested); costs one extra frontier shuffle per round, and the
+    * scheduler joins host metadata by shuffle instead of broadcast. */
   robotsViaJoin: Boolean = false,
-  /** Use the typed per-host heap (Q1) instead of the window scheduler
-    * (W1); results must be identical — tests assert it. */
-  typedHeapScheduler: Boolean = false,
   /** Compact the seen-set delta chain into one base file once this many
     * live files accumulate (Iceberg-style compaction: keeps the per-round
     * scan O(1) instead of O(rounds), amortized O(log) rewrite). */
@@ -44,22 +39,6 @@ final case class CrawlConfig(
     * overhead dominates small-round writes at 32 files; at 10^10-URL
     * scale set this to `partitions` so write parallelism matches. */
   snapshotWriteFiles: Int = 8,
-  /** Skinny scheduling: url_canon (the frontier's widest column) does
-    * not transit the scheduler/global-order/fetch exchanges — the
-    * allowed frontier is cached once, a (url_hash, url_canon) projection
-    * is hash-partitioned once, and both the fetch join and the carried
-    * path recover the string by url_hash off that aligned cache
-    * (exchange-free on the canon side). Cuts per-round shuffle bytes
-    * ~40% — worth it ONLY where shuffle is network-bound and rounds are
-    * large enough to amortize the two extra cache materializations.
-    * Measured on this single-JVM box (same-binary interleaved A/B,
-    * BENCH/BASELINE.md §5): ~14% faster at c8 but ~17% SLOWER at c32 in
-    * every pair — the extra per-round barriers dominate when the sandbox
-    * corpus leaves cores starved — so the default is the wide shape;
-    * wide≡skinny crawl equality is pinned in CrawlEngineSpec.
-    * Ignored (wide) under typedHeapScheduler, which needs the string
-    * in its typed rows. */
-  skinnySchedule: Boolean = false,
   /** Auto-expire superseded snapshot data files every this many rounds
     * (0 = never — expiry stays a manual [[SnapshotStore.expireRounds]]
     * call). Without expiry a 1000-round crawl keeps every superseded
@@ -112,4 +91,7 @@ final case class CrawlConfig(
     *    (status "media", doc_id "") and extracts nothing — media is a
     *    leaf. Off by default: the pinned text-only crawl stays
     *    byte-identical to rounds 1–3. */
-  followMedia: Boolean = false)
+  followMedia: Boolean = false) {
+  require(seenFilter == "bloom" || seenFilter == "cuckoo",
+    s"seenFilter must be \"bloom\" or \"cuckoo\", got \"$seenFilter\"")
+}

@@ -92,25 +92,15 @@ final class CrawlEngine(
   /** robots rules are tiny (≤ hosts × rules/host) — collected once and
     * broadcast; the allow decision is Google-style longest-prefix-match
     * (graft.urls.RobotsMatch, shared with the oracle). */
-  private lazy val (rulesByHost, delayByHost): (Map[String, Array[(Boolean, String)]], Map[String, Long]) = {
-    val rules = CorpusGen.robots(spark, fixtureDir)
-      .select("host", "allow", "path_prefix", "crawl_delay_ms")
+  private lazy val robotsIndex = new RobotsIndex(
+    CorpusGen.robots(spark, fixtureDir)
+      .select("host", "allow", "path_prefix")
       .collect()
-      .map(r => (r.getString(0), r.getBoolean(1), r.getString(2), r.getLong(3)))
-    val byHost = rules.groupBy(_._1).map { case (h, rs) =>
-      h -> rs.map(r => (r._2, r._3))
-    }
-    val delays = rules.groupBy(_._1).map { case (h, rs) => h -> rs.map(_._4).max }
-    (byHost, delays)
-  }
+      .groupBy(_.getString(0))
+      .map { case (h, rs) => h -> rs.map(r => (r.getBoolean(1), r.getString(2))) })
 
-  private lazy val robotsIndex = new RobotsIndex(rulesByHost)
-
-  /** (host, delay_ms) — a DISTRIBUTED aggregate of the robots table
-    * (round 2 derived it from the driver-collected delayByHost map, so
-    * robotsViaJoin mode still funnelled O(#hosts) through the driver;
-    * review finding). The collected map now exists only for the
-    * typed-heap scheduler's documented sandbox-scale path. */
+  /** (host, delay_ms) — a DISTRIBUTED aggregate of the robots table, so
+    * robotsViaJoin mode never funnels O(#hosts) through the driver. */
   private lazy val delaysDf: DataFrame =
     keep(CorpusGen.robots(spark, fixtureDir)
       .groupBy("host").agg(max("crawl_delay_ms").as("delay_ms")))
@@ -226,7 +216,7 @@ final class CrawlEngine(
     val frontierRows =
       Option(frontObs.get("n")).map(_.asInstanceOf[Number].longValue()).getOrElse(0L)
     val bloomPaths: Array[String] =
-      if (cfg.useBloom && cfg.seenFilter == "cuckoo")
+      if (cfg.seenFilter == "cuckoo")
         SeenSet.retireFromShards(spark, retired.select("url_hash"),
           new BloomShardReader(liveBlooms, store.confSer),
           store.bloomsDir(next), cfg.partitions)
@@ -344,13 +334,10 @@ final class CrawlEngine(
       .select(col("url_hash"), col("url_canon"), lit(0).as("first_round"))
     delta.write.mode("overwrite").parquet(deltaP)
     val (bloomPaths, lineage) =
-      if (cfg.useBloom)
-        SeenSet.buildShards(spark,
-          spark.read.schema(seenSchema).parquet(deltaP).select("url_hash"),
-          None, store.bloomsDir(0), cfg.partitions, cfg.bloomShardCapacity, cfg.bloomFpp,
-          cfg.seenFilter)
-      else (Array.empty[String],
-        bucketCounts(spark.read.schema(seenSchema).parquet(deltaP)))
+      SeenSet.buildShards(spark,
+        spark.read.schema(seenSchema).parquet(deltaP).select("url_hash"),
+        None, store.bloomsDir(0), cfg.partitions, cfg.bloomShardCapacity, cfg.bloomFpp,
+        cfg.seenFilter)
     // host-ready carries delay_ms (static per host) so the scheduler's
     // per-round hostMeta broadcast is a plain snapshot read — round 2
     // shuffle-joined delays ⟗ ready inside every round's broadcast future
@@ -425,14 +412,11 @@ final class CrawlEngine(
     require(snapP == 0 || snapP == cfg.partitions,
       s"snapshot at $snapshotRoot was written with partitions=$snapP; " +
         s"resume requires the same (config has ${cfg.partitions})")
-    val bloomReader0: Option[BloomShardReader] =
-      if (cfg.useBloom) {
-        val paths = store.pathsOf(resumeEntry, "bloom_paths").toArray
-        require(paths.length == cfg.partitions,
-          s"snapshot has ${paths.length} bloom shards but config expects " +
-            s"${cfg.partitions} (useBloom toggled across resume, or partitions changed)")
-        Some(new BloomShardReader(paths, store.confSer))
-      } else None
+    val bloomPaths0 = store.pathsOf(resumeEntry, "bloom_paths").toArray
+    require(bloomPaths0.length == cfg.partitions,
+      s"snapshot has ${bloomPaths0.length} seen-filter shards but config expects " +
+        s"${cfg.partitions} (snapshot written without shards, or partitions changed)")
+    val bloomReader0 = new BloomShardReader(bloomPaths0, store.confSer)
     // the round's frontier file is a unique path carried by the manifest
     // (split-brain safety; pre-pointer manifests fall back to the
     // conventional round=R/frontier) — threaded through the loop: each
@@ -500,13 +484,6 @@ final class CrawlEngine(
     def step(): Boolean = {
       if (frontierRows == 0L) { Await.result(tail, Inf); return false }
       val t0 = System.nanoTime()
-      var tLast = t0
-      def lap(name: String): Unit = {
-        val now = System.nanoTime()
-        if (sys.env.contains("GRAFT_TRACE"))
-          System.err.println(f"[trace] r$round $name ${(now - tLast) / 1e9}%6.2f s")
-        tLast = now
-      }
       // this round's frontier file was written by the previous round's
       // sink future; its data (carried/newUrls caches) is guaranteed live
       // until the previous tail joins the sink — here we only need the
@@ -529,48 +506,24 @@ final class CrawlEngine(
       // length, a pure function of url_canon recomputed at schedule
       // time ([PINNED] — CrawlConfig.priorityByUrlLen; Spark `length`
       // counts code points, mirrored by codePointCount in
-      // CrawlOracle.prioOf). Computed BEFORE the skinny projection so
-      // the scheduler sees it without url_canon.
-      val allowedWide =
+      // CrawlOracle.prioOf).
+      val allowedPrio =
         if (cfg.priorityByUrlLen)
           allowedNoPrio.withColumn("prio", length(col("url_canon")))
         else allowedNoPrio
 
-      // Skinny scheduling (cfg.skinnySchedule): url_canon — the row's
-      // widest column (~60-80 B vs ~30 B for the key trio) — must not
-      // transit the three per-round exchanges (scheduler rank,
-      // global-order range, fetch join). The allowed frontier is cached
-      // once; a (url_hash, url_canon) projection of that cache is
-      // hash-partitioned by url_hash ONCE and cached, so both consumers
-      // that need the string back (the fetch join and the carried path)
-      // recover it by url_hash with NO exchange on the canon side (the
-      // InMemory scan's partitioning satisfies the join's required
-      // distribution; only the skinny sched side exchanges). Net: ~40%
-      // fewer shuffle bytes per round, and the robots filter runs once
-      // into the cache instead of twice (scheduler + offsets branches).
-      val skinny = cfg.skinnySchedule && !cfg.typedHeapScheduler
-      // Cache the allowed frontier whenever recomputing it is expensive:
-      // the salted scheduler scans it twice (rank + offsets branches),
-      // which is fine for the broadcast-robots codegen filter (a scan +
-      // filter) but re-executes the whole RobotsJoin dropDuplicates +
-      // join + agg + semi-join subtree per branch in web-scale join mode
-      // (review finding) — and skinny additionally needs the cached
-      // (url_hash, url_canon) projection.
-      val cacheAllowed = skinny || cfg.robotsViaJoin
+      // The salted scheduler scans the allowed frontier twice (rank +
+      // offsets branches). That is fine for the broadcast-robots codegen
+      // filter (a scan + filter), but in web-scale join mode it would
+      // re-execute the whole RobotsJoin dropDuplicates + join + agg +
+      // semi-join subtree per branch (review finding) — so that mode
+      // caches it once.
       val allowedCache =
-        if (cacheAllowed) Some(allowedWide.persist(StorageLevel.MEMORY_AND_DISK)) else None
-      val canonCache =
-        if (skinny) allowedCache.map(_.select("url_hash", "url_canon")
-          .repartition(cfg.partitions, col("url_hash"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+        if (cfg.robotsViaJoin) Some(allowedPrio.persist(StorageLevel.MEMORY_AND_DISK))
         else None
-      val allowed =
-        if (skinny) allowedCache.get.select(
-          ("url_hash" :: "host" :: "depth" ::
-            (if (cfg.priorityByUrlLen) List("prio") else Nil)).map(col): _*)
-        else allowedCache.getOrElse(allowedWide)
+      val allowed = allowedCache.getOrElse(allowedPrio)
 
-      // W1/Q1: politeness schedule
+      // W1: per-host politeness schedule (skew-safe salted rank)
       val hostMeta = hostMetaDf(hostReadyDf)
       // NOTE on row-count metrics: rounds 2-3 rode them on Observations
       // (CollectMetrics) inside the round's plans. That is sound ONLY on
@@ -581,30 +534,14 @@ final class CrawlEngine(
       // every round from exactly this. schedAll/within counts now come
       // from one exact aggregate over the hot schedAll cache after the
       // round's single materialization (same pattern as candCount).
-      val schedAll = (
-        if (cfg.typedHeapScheduler)
-          Scheduler.typedHeap(spark, allowed, delayByHost, collectHostReady(hostReadyDf),
-            cfg.defaultDelayMs, usePrio = cfg.priorityByUrlLen)
-        // web-scale mode (robotsViaJoin): hostMeta is O(#hosts) — join it
-        // distributed instead of broadcasting through the driver
-        else if (cfg.saltedScheduler)
-          Scheduler.salted(allowed, hostMeta, cfg.defaultDelayMs,
-            broadcastMeta = !cfg.robotsViaJoin, usePrio = cfg.priorityByUrlLen)
-        else
-          Scheduler.window(allowed, hostMeta, cfg.defaultDelayMs,
-            broadcastMeta = !cfg.robotsViaJoin, usePrio = cfg.priorityByUrlLen)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+      // In web-scale mode (robotsViaJoin) hostMeta is O(#hosts), so the
+      // scheduler joins it distributed instead of broadcasting it.
+      val schedAll = Scheduler.salted(allowed, hostMeta, cfg.defaultDelayMs,
+          broadcastMeta = !cfg.robotsViaJoin, usePrio = cfg.priorityByUrlLen)
+        .persist(StorageLevel.MEMORY_AND_DISK)
 
-      val carried = canonCache match {
-        case Some(canon) =>
-          schedAll.filter(col("rn") > cfg.perHostPerRound)
-            .select("url_hash", "host", "depth")
-            .join(canon, Seq("url_hash"))
-            .select("url_canon", "url_hash", "host", "depth")
-        case None =>
-          schedAll.filter(col("rn") > cfg.perHostPerRound)
-            .select("url_canon", "url_hash", "host", "depth")
-      }
+      val carried = schedAll.filter(col("rn") > cfg.perHostPerRound)
+        .select("url_canon", "url_hash", "host", "depth")
       val withinHostCap = schedAll.filter(col("rn") <= cfg.perHostPerRound)
 
       // O1/O2: global crawl order + budget truncation. The rank is
@@ -632,21 +569,12 @@ final class CrawlEngine(
           (schedSeq.filter(col("seq") <= cfg.totalBudget)
             .observe(schedObs, count(lit(1)).as("n")), cl)
         } else (withinHostCap, () => ())
-      lap("globalorder")
 
-      // J3: simulated fetch → fetch-log sink (1st heavy action). In
-      // skinny mode url_canon rejoins here off the url_hash-aligned canon
-      // cache (inner: every scheduled row came from the allowed frontier)
-      // — the sched side's one url_hash exchange serves both this join
-      // and the hosting join below.
+      // J3: simulated fetch → fetch-log sink (1st heavy action)
       val fetchObs = new org.apache.spark.sql.Observation(s"fetch-r$round")
-      val schedWide = canonCache match {
-        case Some(canon) => sched.join(canon, Seq("url_hash"))
-        case None        => sched
-      }
-      val fetched = schedWide.join(
+      val fetched = sched.join(
           hosting.select(col("page_hash"), col("doc_id"), col("status")),
-          schedWide("url_hash") === col("page_hash"), "left")
+          sched("url_hash") === col("page_hash"), "left")
         .drop("page_hash")
         // media URLs resolve to no hosting row by design (assets, not
         // pages): status "media", never "missing" — only in media mode so
@@ -667,7 +595,6 @@ final class CrawlEngine(
               Seq(sum(when(col("status") === "media", 1L).otherwise(0L)).as("media"))
             else Seq.empty)): _*)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      lap("fetchjoin-def")
       // ONE materialization of the scheduler + GlobalOrder + fetch-join
       // chain (populates the schedAll and fetched caches, fires every
       // observation). All sinks below then scan the hot cache, so the
@@ -679,7 +606,6 @@ final class CrawlEngine(
       // status metrics: ≤4 rows off the fetched cache. Denied/carried
       // come from count arithmetic (no per-host collects — round 1
       // pulled per-(host,status) counts to the driver every round).
-      lap("fetched-mat")
       def obsLong(o: org.apache.spark.sql.Observation, k: String): Long =
         Option(o.get(k)).map(_.asInstanceOf[Number].longValue()).getOrElse(0L)
       // exact, race-free counts off the hot schedAll cache (one tiny
@@ -691,7 +617,7 @@ final class CrawlEngine(
       // fast path: no budget filter ⇒ scheduled = all within-cap rows
       val schedCount = if (budgetActive) obsLong(schedObs, "n") else withinCount
       if (schedCount == 0L) {
-        (Seq(schedAll, fetched) ++ canonCache ++ allowedCache).foreach(_.unpersist())
+        (Seq(schedAll, fetched) ++ allowedCache).foreach(_.unpersist())
         schedSeqCleanup()
         Await.result(tail, Inf) // the previous round's commit must land
         return false
@@ -743,7 +669,6 @@ final class CrawlEngine(
           .write.mode("overwrite").parquet(fetchLogP)
         finally seqCleanup()
       }
-      lap("statuscounts")
 
       // host-ready advance: ready' = ready + fetched_this_round * delay —
       // a Dataset job over the fetched cache, written to the snapshot (no
@@ -770,7 +695,6 @@ final class CrawlEngine(
       }(scala.concurrent.ExecutionContext.global)
 
       // X1/X2/X3: parse-extract-canonicalize, all inside one codegen stage
-      lap("schedallcount")
       val okDocs = fetched.filter(col("status") === "ok" && col("doc_id") =!= "")
       val spansExploded = okDocs
         .join(docs, Seq("doc_id"))
@@ -818,7 +742,6 @@ final class CrawlEngine(
       // the rank's orderBy(host) uses. The explicit pmod repartition
       // serves the groupBy (pmod(url_hash) clusters url_hash) AND
       // co-locates candidates with their bloom shard for the probe.
-      val candObs = new org.apache.spark.sql.Observation(s"cand-r$round")
       val cand = links
         .withColumn("url_hash", xxhash64(col("link_canon")))
         .withColumn("__b", pmod(col("url_hash"), lit(cfg.partitions.toLong)))
@@ -830,14 +753,11 @@ final class CrawlEngine(
         .select(col("url_hash"), col("f.link_canon").as("url_canon"),
           host_of(col("f.link_canon")).as("host"),
           (col("f.depth") + 1).as("depth"))
-        .observe(candObs, count(lit(1)).as("n"))
-      lap("cand-def")
 
       // join the PREVIOUS round's tail: its shard build, compaction and
       // commit overlapped this round's schedule+fetch materialization
       // above; the probe below is the first thing that needs its output
       val st = Await.result(tail, Inf)
-      lap("tail-join")
 
       // J1: two-phase seen-set dedup (shard-aligned bloom prefilter +
       // exact anti-joins: small deltas first, bucketed base last)
@@ -850,27 +770,22 @@ final class CrawlEngine(
         if (st.tombPaths.isEmpty) None
         else Some(spark.read.schema(tombSchema).parquet(st.tombPaths: _*))
       val (newUrlsDf, probeCleanup, candCountThunk) =
-        SeenSet.newUrls(spark, cand, seenParts, st.bloomReader, tombDf)
+        SeenSet.newUrls(spark, cand, seenParts, Some(st.bloomReader), tombDf)
       val newUrls = newUrlsDf.persist(StorageLevel.MEMORY_AND_DISK)
 
       // ---- commit round R+1 snapshot ----
-      lap("newurls-def")
       // likewise uncoalesced: materializes the extraction + probe chain
       val deltaP = store.uniquePath(next, "seen_delta")
       val delta = newUrls
         .select(col("url_hash"), col("url_canon"), ref_int(next).as("first_round"))
       delta.write.mode("overwrite").parquet(deltaP)
-      // exact count off the hot probe-stage cache when blooms are on —
-      // the candObs Observation stays only as the no-bloom fallback (its
-      // accumulators can double-fire on racing cache materialization in
+      // exact count off the hot probe-stage cache (an Observation on
+      // `cand` can double-fire on racing cache materialization in
       // distributed runs, inflating the headline metric; review finding)
-      val candCount = candCountThunk.map(_())
-        .getOrElse(obsLong(candObs, "n"))
-      lap("delta-write")
+      val candCount = candCountThunk.get()
       // exact new-URL count off the hot cache (the shard build that used
       // to supply it via lineage.sum now runs in the pipelined tail)
       val newCount = newUrls.count()
-      lap("newcount")
       // frontier sink depends only on the schedAll/newUrls caches — it
       // overlaps the tail's shard build; the NEXT round's frontier read
       // gates on it via frontierReady
@@ -886,7 +801,6 @@ final class CrawlEngine(
       // extraction chain)
       Await.result(hostReadyFut, Inf)
       hostReadyDf = spark.read.schema(hostReadySchema).parquet(hostReadyP)
-      lap("hostready-join")
 
       fetchedSoFar += schedCount
       val frontierRowsNext = carriedCount + newCount
@@ -912,21 +826,16 @@ final class CrawlEngine(
       // before defining its seen probe. Captures only immutable locals —
       // no loop var is touched off-thread (thisRound was pinned above,
       // before fetchLogFut, for the same reason).
-      val roundCaches = Seq(schedAll, fetched, newUrls) ++ canonCache ++ allowedCache
+      val roundCaches = Seq(schedAll, fetched, newUrls) ++ allowedCache
       tail = Future {
         // per-partition lineage comes for free from the executor-side
         // bloom-shard build (same pmod(url_hash, P) sharding); input is
         // the hot newUrls cache
-        val (bloomPaths, lineage) = st.bloomReader match {
-          case Some(rd) =>
-            SeenSet.buildShards(spark, newUrls.select("url_hash"), Some(rd),
-              store.bloomsDir(next), cfg.partitions, cfg.bloomShardCapacity, cfg.bloomFpp,
-              cfg.seenFilter)
-          case None => (Array.empty[String], bucketCounts(newUrls))
-        }
-        val nextReader =
-          if (cfg.useBloom) Some(new BloomShardReader(bloomPaths, store.confSer))
-          else None
+        val (bloomPaths, lineage) =
+          SeenSet.buildShards(spark, newUrls.select("url_hash"), Some(st.bloomReader),
+            store.bloomsDir(next), cfg.partitions, cfg.bloomShardCapacity, cfg.bloomFpp,
+            cfg.seenFilter)
+        val nextReader = new BloomShardReader(bloomPaths, store.confSer)
         // join the frontier sink BEFORE compaction: writeSeenBase runs
         // DROP TABLE on the old base, and DropTableCommand uncaches
         // dependent cached plans — including the persisted newUrls frame
@@ -1003,12 +912,6 @@ final class CrawlEngine(
     * delay_ms since round 3); defaults applied at use site. */
   private def hostMetaDf(readyDf: DataFrame): DataFrame =
     readyDf.select(col("host"), col("delay_ms"), col("ready_ts"))
-
-  /** Sandbox-scale fast path for the typed-heap scheduler only (Q1 needs
-    * in-memory maps); the window/salted schedulers never collect this. */
-  private def collectHostReady(readyDf: DataFrame): Map[String, Long] =
-    readyDf.select("host", "ready_ts").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
 }
 
 object CrawlEngine {
@@ -1019,7 +922,7 @@ object CrawlEngine {
   private[crawl] final case class SeenState(
       seenPaths: Seq[String],
       basePath: Option[String],
-      bloomReader: Option[BloomShardReader],
+      bloomReader: BloomShardReader,
       tombPaths: Seq[String])
 
   /** One-time bucketed+sorted storage layout for a static input table

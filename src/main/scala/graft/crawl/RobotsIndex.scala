@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * longest-prefix match compares rule-prefix bytes against the URL's
   * path span in place, so the per-row cost is zero allocations — the
   * previous form allocated three Strings per frontier row (host, url,
-  * path), which DiagFrontier attribution showed was a top CPU line in
+  * path), which per-stage CPU attribution showed was a top line in
   * the 20 M-row steady-state round (and it runs once per scheduler input
   * row). [[RobotsMatch]]/[[UrlCanon.pathOf]] remain the semantic oracle;
   * RobotsIndexSpec pins byte/String equivalence property-style.

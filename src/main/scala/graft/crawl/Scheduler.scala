@@ -1,6 +1,6 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,16 +11,9 @@ import org.apache.spark.sql.functions._
   * of host h virtually fetches at `ready(h) + (k-1) * delay(h)` — the
   * set-at-a-time re-expression of the reference's min-heap + sleep loop
   * keyed by (host, next-fetch-time, depth/priority) (BASELINE.json:6).
-  *
-  * Three interchangeable implementations (tests assert identical output):
-  *  - `window`: single `row_number` over (host) — simplest plan.
-  *  - `salted`: two-phase rank over (host, depth) + cumulative offsets —
-  *    the explicit skew path (BASELINE.json:14): a Zipf-hot host no longer
-  *    lands in one task, because depth (the leading order key) sub-splits
-  *    the partition; offsets are computed distributedly, nothing collects.
-  *  - `typedHeap`: `groupByKey(host).flatMapGroups` with an in-memory
-  *    priority queue — the reference's data structure, kept as the
-  *    fidelity oracle for the window forms.
+  * The sequential reference is graft.oracle.CrawlOracle's per-host sort;
+  * PlanShapeSpec also pins `salted` row for row to that sort done on the
+  * driver.
   *
   * Input columns: url_canon, url_hash, host, depth (+ an int `prio`
   * when `usePrio` — CrawlConfig.priorityByUrlLen's (prio, depth,
@@ -30,43 +23,12 @@ import org.apache.spark.sql.functions._
   */
 object Scheduler {
 
-  final case class FrontierRow(url_canon: String, url_hash: Long, host: String, depth: Int,
-    prio: Int)
-  final case class ScheduledRow(url_canon: String, url_hash: Long, host: String, depth: Int,
-    rn: Int, fetch_ts: Long)
-
   /** With `usePrio` the per-host order key is (prio, depth, url_hash)
     * [PINNED — CrawlConfig.priorityByUrlLen]; the input must carry an
     * integer `prio` column. Without it the key is (depth, url_hash) and
     * the plans are exactly the pre-priority shapes. */
   private def orderKeys(usePrio: Boolean): Seq[String] =
     if (usePrio) Seq("prio", "depth") else Seq("depth")
-
-  /** `broadcastMeta = false` is the web-scale mode: hostMeta is
-    * O(#hosts) (10^7–10^8 rows at the SURVEY sizing), which must not
-    * transit the driver as a broadcast — a plain shuffle join keeps it
-    * distributed end-to-end. The default broadcast is right below that
-    * threshold (one tiny exchange instead of shuffling the frontier). */
-  private def withMeta(df: DataFrame, hostMeta: DataFrame, defaultDelayMs: Long,
-                       broadcastMeta: Boolean): DataFrame = {
-    val meta = if (broadcastMeta) broadcast(hostMeta) else hostMeta
-    df.join(meta, Seq("host"), "left")
-      .withColumn("__delay", coalesce(col("delay_ms"), lit(defaultDelayMs)))
-      .withColumn("__ready", coalesce(col("ready_ts"), lit(0L)))
-      .drop("delay_ms", "ready_ts")
-  }
-
-  private def finish(df: DataFrame): DataFrame =
-    df.withColumn("fetch_ts", col("__ready") + (col("rn").cast("long") - 1L) * col("__delay"))
-      .drop("__delay", "__ready")
-
-  def window(df: DataFrame, hostMeta: DataFrame, defaultDelayMs: Long,
-             broadcastMeta: Boolean = true, usePrio: Boolean = false): DataFrame = {
-    val w = Window.partitionBy("host")
-      .orderBy(orderKeys(usePrio).map(col) :+ col("url_hash"): _*)
-    finish(withMeta(df, hostMeta, defaultDelayMs, broadcastMeta)
-      .withColumn("rn", row_number().over(w)))
-  }
 
   /** Explicit salting for skewed hosts (BASELINE.json:14): a Zipf-head
     * host with millions of frontier URLs must not rank in one task. The
@@ -88,7 +50,12 @@ object Scheduler {
     * (host, depth, url_hash) columns and ships ≤ hosts×depths×256
     * pre-aggregated rows; interleaved same-window A/B at c8 on the 20 M
     * frontier: 41.7 s vs 41.9 s medians — a wash locally, and this form
-    * shuffles strictly less at scale. */
+    * shuffles strictly less at scale.
+    *
+    * `broadcastMeta = false` is the web-scale mode (the engine's
+    * robotsViaJoin shape): hostMeta is O(#hosts) (10^7–10^8 rows at the
+    * SURVEY sizing), which must not transit the driver as a broadcast —
+    * a plain shuffle join keeps it distributed end-to-end. */
   def salted(df: DataFrame, hostMeta: DataFrame, defaultDelayMs: Long,
              broadcastMeta: Boolean = true, usePrio: Boolean = false): DataFrame = {
     val keys = orderKeys(usePrio) // (prio,) depth — the pre-salt order prefix
@@ -120,37 +87,9 @@ object Scheduler {
       .withColumn("__ready", coalesce(col("ready_ts"), lit(0L)))
       .select((col("host") +: keys.map(col)) ++ Seq(col("__salt"), col("__offset"),
         col("__delay"), col("__ready")): _*)
-    finish(
-      fine.join(offsets, ("host" +: keys) :+ "__salt")
-        .withColumn("rn", (col("__offset") + col("__rnd")).cast("int"))
-        .drop("__rnd", "__offset", "__salt"))
-  }
-
-  /** Q1 — the reference's per-host min-heap, typed. Identical output to
-    * `window` by construction (heap key = ((prio,) depth, url_hash)). */
-  def typedHeap(spark: SparkSession, df: DataFrame,
-                delayOf: Map[String, Long], readyOf: Map[String, Long],
-                defaultDelayMs: Long, usePrio: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val delayB = spark.sparkContext.broadcast(delayOf)
-    val readyB = spark.sparkContext.broadcast(readyOf)
-    val ds: Dataset[FrontierRow] =
-      df.select(col("url_canon"), col("url_hash"), col("host"), col("depth"),
-          (if (usePrio) col("prio") else lit(0)).as("prio"))
-        .as[FrontierRow]
-    ds.groupByKey(_.host)
-      .flatMapGroups { (host, it) =>
-        implicit val ord: Ordering[FrontierRow] =
-          Ordering.by[FrontierRow, (Int, Int, Long)](r => (r.prio, r.depth, r.url_hash)).reverse
-        val heap = scala.collection.mutable.PriorityQueue.empty[FrontierRow]
-        it.foreach(heap.enqueue(_))
-        val delay = delayB.value.getOrElse(host, defaultDelayMs)
-        val ready = readyB.value.getOrElse(host, 0L)
-        Iterator.tabulate(heap.size) { i =>
-          val r = heap.dequeue()
-          ScheduledRow(r.url_canon, r.url_hash, r.host, r.depth, i + 1, ready + i.toLong * delay)
-        }
-      }
-      .toDF()
+    fine.join(offsets, ("host" +: keys) :+ "__salt")
+      .withColumn("rn", (col("__offset") + col("__rnd")).cast("int"))
+      .withColumn("fetch_ts", col("__ready") + (col("rn").cast("long") - 1L) * col("__delay"))
+      .drop("__rnd", "__offset", "__salt", "__delay", "__ready")
   }
 }

@@ -76,10 +76,10 @@ final class CuckooShardFilter(val cf: CuckooFilter, private var saturated: Boole
 }
 
 object ShardFilter {
-  /** `kind` ∈ {"bloom", "cuckoo"} (CrawlConfig.seenFilter). */
   def create(kind: String, capacity: Long, fpp: Double): ShardFilter = kind match {
     case "cuckoo" => new CuckooShardFilter(CuckooFilter.create(capacity))
-    case _ => new BloomShardFilter(BloomFilter.create(capacity, fpp))
+    case "bloom" => new BloomShardFilter(BloomFilter.create(capacity, fpp))
+    case k => throw new IllegalArgumentException(s"unknown seen filter kind: \"$k\"")
   }
 
   def readFrom(in: java.io.DataInputStream): ShardFilter = in.readByte().toChar match {

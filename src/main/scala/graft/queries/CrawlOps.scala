@@ -31,7 +31,9 @@ object CrawlOps {
     * (round 3 raised docs/20 → docs/6: two fewer rounds at sf0.1, each
     * ~5 s of fixed per-round cost; the crawl-result change is mirrored
     * by the golden oracle, which runs the same config). Politeness
-    * (virtual fetch_ts spacing) is unaffected by the budget. */
+    * (virtual fetch_ts spacing) is unaffected by the budget. Only sizes
+    * are set here: every crawl runs the engine's one round shape
+    * (salted schedule, broadcast robots, bloom seen-filter shards). */
   def crawlConfigFor(partitions: Int, tier: CorpusGen.Tier): CrawlConfig = {
     val perHost = math.max(2500, tier.docs / 6)
     // Partition count sized to the DATA, capped by the session's
@@ -45,12 +47,7 @@ object CrawlOps {
     val dataSized = math.min(partitions, math.max(8, tier.docs / 625))
     val p = sys.env.get("GRAFT_CRAWL_PARTITIONS").map(_.toInt).getOrElse(dataSized)
     CrawlConfig(maxDepth = 10, perHostPerRound = perHost, partitions = p,
-      bloomShardCapacity = math.max(100000L, tier.docs.toLong),
-      // GRAFT_CRAWL_SKINNY = same-binary A/B control: keep url_canon
-      // out of the per-round exchanges and rejoin it off the
-      // url_hash-aligned canon cache (loses at c32 on this box — see
-      // CrawlConfig.skinnySchedule scaladoc; opt-in for clusters)
-      skinnySchedule = sys.env.contains("GRAFT_CRAWL_SKINNY"))
+      bloomShardCapacity = math.max(100000L, tier.docs.toLong))
   }
 
   /** Span-order-preserving packed text (newline-joined text spans in

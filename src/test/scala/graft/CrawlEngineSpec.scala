@@ -100,18 +100,23 @@ class CrawlEngineSpec extends SparkTestBase {
     // fallback paths) — and assert a fresh engine resumes to the exact
     // uninterrupted crawl: resume reads ONLY manifest-referenced paths,
     // so none of the debris is ever opened.
-    import java.nio.file.{Files, Paths}
-    def splat(path: String, name: String): Unit = {
-      val d = Paths.get(path)
-      Files.createDirectories(d)
-      Files.write(d.resolve(name), "not a parquet file".getBytes)
-    }
+    // The debris goes through the store's own Hadoop FileSystem: the
+    // store's paths are qualified URIs (file:/...), which java.nio would
+    // treat as relative names and write somewhere resume never looks.
+    import org.apache.hadoop.fs.Path
     Seq(1, 3).foreach { k =>
       val dir = snapDir(s"torn-$k")
       val e1 = new CrawlEngine(spark, fixtureDir, dir, cfg)
       e1.runFresh(maxRounds = k)
       val last = e1.store.lastCommitted().get
       val next = last + 1
+      val debris = scala.collection.mutable.ArrayBuffer.empty[String]
+      def splat(path: String, name: String): Unit = {
+        val p = new Path(path, name)
+        val out = e1.store.fs.create(p, true)
+        try out.write("not a parquet file".getBytes) finally out.close()
+        debris += p.toString
+      }
       // a crashed attempt's torn unique-path dirs (the real data plane)
       for (kind <- Seq("frontier", "fetchlog", "seen_delta", "hostready"))
         splat(s"${e1.store.roundDir(next)}/$kind-deadbeef",
@@ -126,19 +131,12 @@ class CrawlEngineSpec extends SparkTestBase {
       splat(e1.store.hostReadyPath(next), "part-00000.snappy.parquet")
       splat(e1.store.bloomsDir(next), "shard-0.dead-uuid.bin")
       splat(e1.store.seenBasePath(next), "part-00000.snappy.parquet")
+      debris.foreach(d => assert(e1.store.exists(d), s"debris not where the store resolves: $d"))
       val e2 = new CrawlEngine(spark, fixtureDir, dir, cfg)
       e2.resume()
       assert(collectLog(e2) == collectLog(engine), s"fetch log diverged at stop point $k")
       assert(collectSeen(e2) == collectSeen(engine), s"seen set diverged at stop point $k")
     }
-  }
-
-  test("skinny scheduling (url_canon rejoined off the canon cache) produces the identical crawl") {
-    val eSkinny = new CrawlEngine(spark, fixtureDir, snapDir("skinny"),
-      cfg.copy(skinnySchedule = true))
-    eSkinny.runFresh()
-    assert(collectLog(eSkinny) == collectLog(engine))
-    assert(collectSeen(eSkinny) == collectSeen(engine))
   }
 
   test("media-follow crawl (media_ref spans enqueued) equals the sequential oracle exactly") {
@@ -165,7 +163,7 @@ class CrawlEngineSpec extends SparkTestBase {
     assert(collectLog(engine).forall(r => r._9 != "media"))
   }
 
-  test("priority crawl (URL-length priority) equals the sequential oracle exactly, all schedulers") {
+  test("priority crawl (URL-length priority) equals the sequential oracle exactly") {
     val pCfg = cfg.copy(priorityByUrlLen = true)
     val ePrio = new CrawlEngine(spark, fixtureDir, snapDir("prio"), pCfg)
     ePrio.runFresh()
@@ -180,42 +178,6 @@ class CrawlEngineSpec extends SparkTestBase {
     // otherwise this test proves nothing beyond the default-path test
     assert(got != collectLog(engine),
       "priority crawl identical to the default crawl: the priority signal never fired")
-    // the window and typed-heap schedulers agree under priority too
-    val eWinP = new CrawlEngine(spark, fixtureDir, snapDir("prio-window"),
-      pCfg.copy(saltedScheduler = false))
-    eWinP.runFresh()
-    assert(collectLog(eWinP) == got)
-    val eHeapP = new CrawlEngine(spark, fixtureDir, snapDir("prio-heap"),
-      pCfg.copy(typedHeapScheduler = true))
-    eHeapP.runFresh()
-    assert(collectLog(eHeapP) == got)
-    // skinny scheduling projects the frontier down to key columns before
-    // the scheduler — the one path where a missing prio column would
-    // only surface at runtime
-    val eSkinnyP = new CrawlEngine(spark, fixtureDir, snapDir("prio-skinny"),
-      pCfg.copy(skinnySchedule = true))
-    eSkinnyP.runFresh()
-    assert(collectLog(eSkinnyP) == got)
-  }
-
-  test("window, salted, and typed-heap schedulers produce identical crawls") {
-    val eWindow = new CrawlEngine(spark, fixtureDir, snapDir("window"),
-      cfg.copy(saltedScheduler = false))
-    eWindow.runFresh()
-    assert(collectLog(eWindow) == collectLog(engine))
-
-    val eHeap = new CrawlEngine(spark, fixtureDir, snapDir("heap"),
-      cfg.copy(typedHeapScheduler = true))
-    eHeap.runFresh()
-    assert(collectLog(eHeap) == collectLog(engine))
-  }
-
-  test("bloom prefilter changes nothing (exactness) and blooms have no false negatives") {
-    val eNoBloom = new CrawlEngine(spark, fixtureDir, snapDir("nobloom"),
-      cfg.copy(useBloom = false))
-    eNoBloom.runFresh()
-    assert(collectSeen(eNoBloom) == collectSeen(engine))
-    assert(collectLog(eNoBloom) == collectLog(engine))
   }
 
   test("resume re-registers the bucketed seen base after catalog loss (fresh-session path)") {
@@ -279,6 +241,16 @@ class CrawlEngineSpec extends SparkTestBase {
     eCuckoo.runFresh()
     assert(collectSeen(eCuckoo) == collectSeen(engine))
     assert(collectLog(eCuckoo) == collectLog(engine))
+  }
+
+  test("an unknown seenFilter kind fails loudly instead of crawling with bloom shards") {
+    // a typo must not crawl with bloom shards: retireHost would then
+    // skip the cuckoo deletion path without a word
+    val cfgErr = intercept[IllegalArgumentException](cfg.copy(seenFilter = "Cuckoo"))
+    assert(cfgErr.getMessage.contains("Cuckoo"), cfgErr.getMessage)
+    val createErr = intercept[IllegalArgumentException](
+      graft.crawl.ShardFilter.create("Cuckoo", 100L, 0.01))
+    assert(createErr.getMessage.contains("Cuckoo"), createErr.getMessage)
   }
 
   test("retireHost deletes a host's URLs from seen + frontier + cuckoo shards") {

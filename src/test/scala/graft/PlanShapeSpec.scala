@@ -52,6 +52,39 @@ class PlanShapeSpec extends SparkTestBase {
       .agg(max("crawl_delay_ms").as("delay_ms")).withColumn("ready_ts", lit(0L))
     val p = plan(Scheduler.salted(frontier, meta, 0L))
     assert(p.contains("hashpartitioning(host") && p.contains("__salt"), p)
+
+    // rn and fetch_ts against a direct reference: a driver-side per-host
+    // sort by ((prio,) depth, url_hash), rn = index + 1 and
+    // fetch_ts = ready + (rn - 1) * delay. Nonzero ready times, and a
+    // quarter of the hosts left without meta (default delay, ready 0).
+    import spark.implicits._
+    val defaultDelay = 7L
+    val partialMeta = meta
+      .withColumn("ready_ts", (length(col("host")) * 1000).cast("long"))
+      .filter(pmod(xxhash64(col("host")), lit(4)) =!= 0)
+    val metaOf = partialMeta.select("host", "delay_ms", "ready_ts")
+      .as[(String, Long, Long)].collect().map(m => m._1 -> ((m._2, m._3))).toMap
+    val rows = frontier.as[(String, Long, String, Int)].collect()
+    assert(rows.exists(r => !metaOf.contains(r._3)) && rows.exists(r => metaOf.contains(r._3)))
+    def checkAgainstReference(usePrio: Boolean, broadcastMeta: Boolean): Unit = {
+      val in = if (usePrio) frontier.withColumn("prio", length(col("url_canon"))) else frontier
+      val got = Scheduler.salted(in, partialMeta, defaultDelay, broadcastMeta, usePrio)
+        .select("url_hash", "rn", "fetch_ts").as[(Long, Int, Long)].collect()
+      val want = rows.groupBy(_._3).toSeq.flatMap { case (host, hs) =>
+        val (delay, ready) = metaOf.getOrElse(host, (defaultDelay, 0L))
+        hs.sortBy(r => (if (usePrio) r._1.codePointCount(0, r._1.length) else 0, r._4, r._2))
+          .zipWithIndex.map { case (r, i) => (r._2, i + 1, ready + i * delay) }
+      }
+      assert(want.map(_._2).max > 1, "reference has no multi-URL host")
+      val mode = s"usePrio=$usePrio broadcastMeta=$broadcastMeta"
+      assert(got.length == rows.length, s"$mode: ${got.length} rows, want ${rows.length}")
+      // url_hash is unique, so sorting aligns the two sides row for row
+      val wrong = got.sorted.toSeq.zip(want.sorted).filter(t => t._1 != t._2)
+      assert(wrong.size == 0, s"$mode: rows differ, e.g. (got, want) = ${wrong.take(3)}")
+    }
+    checkAgainstReference(usePrio = false, broadcastMeta = true)
+    checkAgainstReference(usePrio = true, broadcastMeta = true)
+    checkAgainstReference(usePrio = false, broadcastMeta = false)
   }
 
   test("GlobalOrder assigns seq without a single-partition window, off ONE pinned exchange") {
