@@ -1,12 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import java.util.Comparator
-
 import graft.corpus.CorpusGen
-import graft.crawl.{RobotsAllows, RobotsIndex, Scheduler}
+import graft.crawl.{CrawlEngine, RobotsAllows, RobotsIndex, Scheduler}
 import graft.functions.canonicalize_url
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Shim
 import org.apache.spark.storage.StorageLevel
@@ -28,11 +25,12 @@ import org.apache.spark.storage.StorageLevel
   * xxhash64 → intra-batch dedup → anti-join against a preloaded seen set.
   *
   * The static inputs ("the web" hosting map and the interleaved corpus)
-  * live as one-time bucketed+sorted parquet tables — the same production
-  * layout the iterative crawl loop adopted in round 3 (CrawlEngine
-  * .bucketedInput): the fetch join and the docs join scan bucket-aligned
-  * with no exchange and no sort on the static side, so the timed round
-  * shuffles only the frontier-derived sides. The bucket count is PINNED
+  * live as one-time bucketed+sorted parquet tables written by the crawl
+  * engine's own [[CrawlEngine.bucketedInput]] — the production layout
+  * the iterative crawl loop adopted in round 3: the fetch join and the
+  * docs join scan bucket-aligned with no exchange and no sort on the
+  * static side, so the timed round shuffles only the frontier-derived
+  * sides. The bucket count is PINNED
   * (default 128) independently of the core count, so the N-core and
   * 4N-core scaling runs read byte-identical inputs through an identical
   * exchange topology.
@@ -41,36 +39,6 @@ import org.apache.spark.storage.StorageLevel
   * scaling evidence: efficiency = T_32 / (4 × T_8).
   */
 object BenchFrontier {
-  /** One-time bucketed+sorted parquet table next to the fixtures (bench
-    * storage prep, local-FS by design — the engine's own snapshot/shard
-    * I/O goes through the Hadoop FileSystem API instead). Re-registered
-    * from explicit DDL in fresh sessions (in-memory catalog). */
-  private def bucketedTable(spark: SparkSession, loc: String, name: String,
-                            key: String, buckets: Int, ddl: String)
-                           (src: => DataFrame): DataFrame = {
-    val tbl = s"bench_${name}_${java.lang.Integer.toHexString(loc.hashCode)}"
-    val marker = Paths.get(loc, "_BUCKETED_DONE")
-    if (!Files.exists(marker)) {
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      val dir = Paths.get(loc)
-      if (Files.exists(dir)) {
-        val walk = Files.walk(dir)
-        try walk.sorted(Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.delete(p))
-        finally walk.close()
-      }
-      src.repartition(buckets, col(key))
-        .write.format("parquet").bucketBy(buckets, key).sortBy(key)
-        .option("path", loc).saveAsTable(tbl)
-      Files.createFile(marker)
-    } else if (!spark.catalog.tableExists(tbl)) {
-      spark.sql(s"CREATE TABLE $tbl ($ddl) USING PARQUET " +
-        s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
-        s"LOCATION '$loc'")
-    }
-    spark.table(tbl)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -94,11 +62,6 @@ object BenchFrontier {
       .config("spark.sql.autoBroadcastJoinThreshold", -1) // measure the shuffle path
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // A/B knob: shuffle/spill block codec (default lz4). zstd trades
-      // CPU for bytes — the right trade iff the run is bus/IO-bound, so
-      // measure per regime rather than assume.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("GRAFT_IO_CODEC", "lz4"))
     executors match {
       case Some(e) =>
         builder.master(s"local-cluster[$e,$cpus,$execMb]")
@@ -111,27 +74,20 @@ object BenchFrontier {
     val fx = CorpusGen.ensureFor(spark, sfDir)
 
     // ---- untimed input preparation ("the web" + the frontier + seen) ----
-    // CorpusGen.GenVersion in the path — same staleness rule as the
-    // engine's bucketedInput: a generator bump regenerates only the base
-    // parquet, so derived tables must version their own location
-    val prepRoot = s"$fx/frontierx-${CorpusGen.GenVersion}-v$variants-b$buckets"
-    val hostingX = bucketedTable(spark, s"$prepRoot/hosting", "hostingx",
-      "page_hash", buckets,
-      "url_canon STRING, host STRING, doc_id STRING, status STRING, page_hash BIGINT") {
+    // the variant count is part of the table name: bucketedInput already
+    // versions the location by generator version and bucket count
+    val hostingX = CrawlEngine.bucketedInput(spark, fx, buckets, s"hostingx_v$variants",
       CorpusGen.hosting(spark, fx)
         .select(col("url_canon"), col("host"), col("doc_id"), col("status"),
           explode(sequence(lit(0), lit(variants - 1))).as("v"))
         .withColumn("url_canon", concat(col("url_canon"), lit("?v="), col("v")))
         .withColumn("page_hash", xxhash64(col("url_canon")))
-        .drop("v")
-    }
+        .drop("v"),
+      "page_hash",
+      "url_canon STRING, host STRING, doc_id STRING, status STRING, page_hash BIGINT")
     val frontierSize = hostingX.count()
 
-    val docs = bucketedTable(spark, s"$prepRoot/docs", "docs", "doc_id", buckets,
-      "doc_id STRING, spans ARRAY<STRUCT<kind: STRING, text: STRING, " +
-        "media_ref: STRING, offset: INT>>") {
-      CorpusGen.interleaved(spark, fx)
-    }
+    val docs = CrawlEngine.docsBucketed(spark, fx, buckets)
 
     // seen set: every 10th base-page URL is already seen (candidate links
     // resolve to base URLs, so the anti-join genuinely dedupes ~10%)
@@ -163,26 +119,11 @@ object BenchFrontier {
     // ---- the timed round -------------------------------------------------
     val t0 = System.nanoTime()
 
-    // Skinny scheduling (late round 3, OPT-IN — measured worse here):
-    // url_canon (the row's widest column, ~60-80 B vs ~30 B for the
-    // rest) does NOT transit the scheduler exchange, the global-order
-    // range exchange, or the fetch-join exchange — it is recovered from
-    // the bucketed hosting table by the fetch join the pipeline already
-    // does (exchange-free on the bucketed side). Same-binary interleaved
-    // A/B (BENCH/BASELINE.md §5): wash at c8, consistently ~25% slower
-    // at c32 (the recovered column widens the hosting-side parquet read,
-    // and this box's shuffle is memory-bus-bound, so saved bytes don't
-    // pay). Wide is default; GRAFT_FRONTIER_SKINNY selects skinny for
-    // network-shuffle-bound deployments.
-    val wide = !sys.env.contains("GRAFT_FRONTIER_SKINNY")
-    val allowed0 = frontier.filter(Shim.col(RobotsAllows(
+    val allowed = frontier.filter(Shim.col(RobotsAllows(
       Shim.expr(col("host")), Shim.expr(col("url_canon")), robotsIndex)))
-    val allowed = if (wide) allowed0 else allowed0.select("url_hash", "host", "depth")
     val sched = Scheduler.salted(allowed, delays, 0L)
 
-    val hostingCols = if (wide) Seq("page_hash", "doc_id", "status")
-                      else Seq("page_hash", "url_canon", "doc_id", "status")
-    val fetched = sched.join(hostingX.select(hostingCols.map(col): _*),
+    val fetched = sched.join(hostingX.select("page_hash", "doc_id", "status"),
         sched("url_hash") === col("page_hash"), "left")
       .drop("page_hash")
 

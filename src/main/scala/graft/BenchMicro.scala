@@ -56,9 +56,7 @@ object BenchMicro {
     val secMix = (System.nanoTime() - t3) / 1e9
     // robots kernel: the codegen RobotsAllows decision over a 1500-host
     // rule table (4 prefixes/host, 1/3 of probed hosts unlisted) —
-    // isolates the byte-level matcher added late in round 3. Run with
-    // GRAFT_ROBOTS_STRINGS=1 for the allocating String-oracle control
-    // (same binary; the flag is read once per JVM inside RobotsIndex).
+    // isolates the byte-level matcher added late in round 3.
     val robotsIdx = new graft.crawl.RobotsIndex(
       (0 until 1000).map { k =>
         s"host$k.example" -> Array((false, "/private"), (true, "/private/pub"),
@@ -78,8 +76,7 @@ object BenchMicro {
       s""""fastpath_sec":$secFast,"fastpath_urls_per_sec":${n / secFast},"checksum_fast":$outFast,""" +
       s""""relpath_sec":$secRel,"relpath_urls_per_sec":${n / secRel},"checksum_rel":$outRel,""" +
       s""""mixed_sec":$secMix,"mixed_urls_per_sec":${n / secMix},"checksum_mixed":$outMix,""" +
-      s""""robots_sec":$secRob,"robots_urls_per_sec":${n / secRob},"robots_allowed":$outRob,""" +
-      s""""robots_strings":${sys.env.contains("GRAFT_ROBOTS_STRINGS")}}""")
+      s""""robots_sec":$secRob,"robots_urls_per_sec":${n / secRob},"robots_allowed":$outRob}""")
     spark.stop()
   }
 }

@@ -256,25 +256,6 @@ object ClusterCheck {
       require(wantM.log.exists(_.status == "media"),
         "media-follow cluster check fetched no media URL (vacuous)")
 
-      // object-store commit mode under multi-JVM: the log-mode CAS path
-      // (exclusive-create commits, immutable manifest.d assembly, entry
-      // cache) has only ever run multi-process under a local[] master
-      // (LiveReaderSpec/SplitBrainSpec) — run it across forked executors
-      // with a mid-crawl stop + resume, byte-identical to the oracle.
-      // Commit mode is a DRIVER-side concern (executors only touch
-      // parquet/shard files), set on the session's hadoopConf.
-      val hc = spark.sparkContext.hadoopConfiguration
-      hc.set("graft.snapshot.commit.mode", "log")
-      val (fetchedL, seenL) =
-        try {
-          val e4 = new CrawlEngine(spark, fixtureDir, s"$snap-log", cfg)
-          e4.runFresh(maxRounds = 3)
-          val e5 = new CrawlEngine(spark, fixtureDir, s"$snap-log", cfg)
-          e5.resume()
-          OracleAssert.assertMatches(e5, want,
-            s"log commit mode under local-cluster[$executors,$coresPer]")
-        } finally hc.unset("graft.snapshot.commit.mode")
-
       // hostRank (q45's loop) under multi-JVM: Shim.fromCache rebuilds
       // each iteration's frame on an InMemoryRelation whose cached
       // blocks live in the forked executor JVMs (local[n] shares the
@@ -325,7 +306,6 @@ object ClusterCheck {
       println(s"CLUSTER-CHECK OK executors=$executors coresPer=$coresPer " +
         s"fetched=$fetched seen=$seen retire_resume_seen=${got2Seen.size} " +
         s"media_fetched=$fetchedM media_seen=$seenM " +
-        s"logmode_fetched=$fetchedL logmode_seen=$seenL " +
         s"rank_hosts=${gotRank.size} comp_hosts=${gotComp.size}")
     } finally spark.stop()
   }

@@ -171,7 +171,7 @@ final class CrawlEngine(
     * number of retired URLs. */
   def retireHost(host: String): Long = {
     // ONE manifest read for the whole operation: the former per-field
-    // liveX() accessors each re-read the manifest (in log mode: re-list
+    // liveX() accessors each re-read the manifest (each re-lists
     // manifest.d and re-GET every entry object — ~5× the I/O on a
     // 1000-round crawl), and two independent reads can straddle a
     // concurrent commit and pair mismatched rounds' state
@@ -363,7 +363,7 @@ final class CrawlEngine(
   private def loop(maxRounds: Int): CrawlSummary = {
     // ONE manifest read for the whole resume (same review class as
     // retireHost's fix): the per-field liveX() accessors each re-read the
-    // manifest — in log mode re-listing manifest.d per call — and two
+    // manifest — re-listing manifest.d per call — and two
     // independent reads can straddle a concurrent commit, pairing round
     // N's seen files with round N+1's cleared tombstone list. Everything
     // below derives from this one entry.
@@ -938,10 +938,12 @@ object CrawlEngine {
     * the explicit DDL. Lives on the companion so benchmarks can run it
     * as UNTIMED input preparation ([[prepareStaticInputs]]) — a real
     * deployment ingests the corpus into its bucketed Iceberg layout once,
-    * not once per crawl. */
-  private def bucketedInput(spark: SparkSession, fixtureDir: String, partitions: Int,
-                            name: String, src: => DataFrame, key: String,
-                            ddl: String): DataFrame = {
+    * not once per crawl. `name` also names the catalog table, so it must
+    * be a plain identifier (BenchFrontier's variant-multiplied hosting
+    * table shares this layout code). */
+  private[graft] def bucketedInput(spark: SparkSession, fixtureDir: String, partitions: Int,
+                                   name: String, src: => DataFrame, key: String,
+                                   ddl: String): DataFrame = {
     val store = new SnapshotStore(fixtureDir, spark.sparkContext.hadoopConfiguration)
     // GenVersion in the path: CorpusGen.ensure regenerates only the base
     // parquet on a generator bump — an unversioned bucketed copy would
@@ -970,8 +972,8 @@ object CrawlEngine {
       "hosting", CorpusGen.hosting(spark, fixtureDir), "page_hash",
       "page_hash BIGINT, url_canon STRING, host STRING, doc_id STRING, status STRING")
 
-  private[crawl] def docsBucketed(spark: SparkSession, fixtureDir: String,
-                                  partitions: Int): DataFrame =
+  private[graft] def docsBucketed(spark: SparkSession, fixtureDir: String,
+                                   partitions: Int): DataFrame =
     bucketedInput(spark, fixtureDir, partitions,
       "interleaved", CorpusGen.interleaved(spark, fixtureDir), "doc_id",
       "doc_id STRING, spans ARRAY<STRUCT<kind: STRING, text: STRING, " +

@@ -37,14 +37,7 @@ final class RobotsIndex(rulesByHost: Map[String, Array[(Boolean, String)]]) exte
     m
   }
 
-  /** Same-binary A/B control: GRAFT_ROBOTS_STRINGS routes the decision
-    * through the allocating String oracle so byte-vs-String throughput
-    * can interleave within one bench window (host drift makes
-    * cross-window comparisons meaningless). Read once per JVM. */
-  @transient private lazy val useStringOracle = sys.env.contains("GRAFT_ROBOTS_STRINGS")
-
   def allowsUrl(host: UTF8String, urlCanon: UTF8String): Boolean = {
-    if (useStringOracle) return allowsUrlViaStrings(host, urlCanon)
     val rules = compiled.get(host)
     if (rules == null || rules.isEmpty) return true
     val n = urlCanon.numBytes()

@@ -3,7 +3,7 @@ package graft.crawl
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import scala.jdk.CollectionConverters._
 
 /** A committer lost an optimistic-concurrency race: another driver
@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
   * attempt as durable; the correct reaction for a crawl driver is to die
   * (a second driver owns the store now) or re-resume from the winner's
   * state. Losers never mutate the manifest: the precondition reads
-  * first, and the log-mode CAS is an exclusive create whose loser writes
+  * first, and the CAS is an exclusive create whose loser writes
   * nothing — a conflicted store never holds a loser's entry. */
 final class CommitConflictException(msg: String) extends RuntimeException(msg)
 
@@ -47,52 +47,47 @@ final class HadoopConfSer(@transient private var conf: Configuration) extends Se
   * scheme). The sandbox exercises the same code through
   * `RawLocalFileSystem`.
   *
-  * ==Manifest commit modes==
+  * ==Manifest commit protocol==
   * Round visibility is defined by the manifest, so manifest commit is the
   * only step that needs atomicity (data files land under not-yet-visible
-  * `round=R/` dirs first). Two modes:
-  *
-  *  - `rename` (default on filesystems with atomic rename: HDFS, local,
-  *    viewfs): the whole manifest is rewritten to a temp file and swapped
-  *    in with FileContext rename-with-OVERWRITE — the same single-FS
-  *    primitive Iceberg's HadoopTableOperations uses.
-  *  - `log` (default on object stores, where rename is copy+delete and a
-  *    reader can race the swap): commits never rewrite anything. Each
-  *    round is ONE immutable JSON object at the round's FIXED name under
-  *    `manifest.d/` (`r<round%09d>.json`, exclusive-create — the
-  *    concurrent-committer CAS, see [[commit]]); readers list the
-  *    directory and assemble the manifest in name order. Visibility is
-  *    object creation — atomic per object on S3/GCS/ABFS — so no reader
-  *    ever observes a half-swapped manifest, and commit cost is O(1)
-  *    instead of O(rounds). An entry that fails to parse (an in-flight
-  *    PUT, or a crashed committer's torn create) is treated as
-  *    uncommitted, exactly like a data dir without a manifest line.
-  *    (Pre-split-brain stores used `r<round%09d>-<uuid>.json` names;
-  *    readers still resolve them, first name winning a duplicate round.)
-  *
-  * Mode resolution: explicit `graft.snapshot.commit.mode` hadoopConf key
-  * (`rename` | `log`), else by the root FS scheme ([[SnapshotStore.ObjectStoreSchemes]]
-  * → `log`, anything else → `rename`). The rename path is never invoked
-  * in `log` mode, verified by a rename-refusing FileSystem in tests.
+  * `round=R/` dirs first). Commits never rewrite anything: each round is
+  * ONE immutable JSON object at the round's FIXED name under `manifest.d/`
+  * (`r<round%09d>.json`, exclusive-create — the concurrent-committer CAS,
+  * see [[commit]]); readers list the directory and assemble the manifest
+  * in name order. Visibility is object creation — atomic per object on
+  * S3/GCS/ABFS, one arbitrated create on HDFS and the local FS — so no
+  * reader ever observes a half-written manifest, and commit cost is O(1)
+  * instead of O(rounds). No rename is called anywhere on the commit or
+  * read path (verified by a rename-refusing FileSystem in tests), so the
+  * one protocol runs unchanged on local FS, HDFS and object stores. An
+  * entry that fails to parse (an in-flight PUT, or a crashed committer's
+  * torn create) is treated as uncommitted, exactly like a data dir
+  * without a manifest entry. (Pre-split-brain stores used
+  * `r<round%09d>-<uuid>.json` names; readers still resolve them, first
+  * name winning a duplicate round.) A root holding a `manifest.jsonl` —
+  * the whole-file rename-swap manifest of stores that predate the single
+  * protocol — fails loudly instead of reading as an empty store.
   *
   * ==Optimistic concurrency (split-brain safety)==
   * [[commit]] implements the Iceberg `CommitFailedException` contract:
   * two drivers racing commits on one store cannot silently fork or
-  * truncate history — the loser gets [[CommitConflictException]]. `log`
-  * mode is exact for concurrent committers (per-round winner
-  * verification over immutable uniquely-named entries); `rename` mode is
-  * single-live-committer by contract with best-effort stale-committer
-  * detection, the same stance as Iceberg's Hadoop tables. Data files
-  * participate through UNIQUE per-commit paths ([[uniquePath]]) carried
-  * by the manifest entry — a loser's pre-conflict writes are invisible
-  * orphans, never overwrites of files a winning commit references.
+  * truncate history — the loser gets [[CommitConflictException]]. The
+  * guarantee is exact for concurrent committers (per-round winner
+  * arbitration by exclusive create, then read-back verification). Data
+  * files participate through UNIQUE per-commit paths ([[uniquePath]])
+  * carried by the manifest entry — a loser's pre-conflict writes are
+  * invisible orphans, never overwrites of files a winning commit
+  * references.
   *
   * Layout under `root` (data dirs are the unique-path forms since the
   * split-brain work, e.g. `frontier-3fa9c1b2/`; the fixed names remain
   * as read fallbacks for older manifests):
   * {{{
-  *   manifest.jsonl          one JSON object per committed round (append-only,
-  *                           atomically replaced via temp-file + rename)
+  *   manifest.d/r<R>.json    one immutable JSON object per committed round
+  *                           (R zero-padded to 9 digits; exclusive-created,
+  *                           never rewritten)
+  *   manifest.d/_table-u     empty marker carrying the table's identity
+  *                           (written by the table's first commit)
   *   round=R/frontier-u/     parquet — the frontier entering round R
   *                           (entry field frontier_path)
   *   round=R/seen_delta-u/   parquet — url hashes first seen in round R-1's
@@ -110,9 +105,9 @@ final class HadoopConfSer(@transient private var conf: Configuration) extends Se
   *                           hosts at web scale; entry field hostready_path)
   * }}}
   *
-  * A round is visible iff its manifest line is present; partially-written
-  * round directories without a manifest line are ignored on resume (the
-  * atomic-commit contract).
+  * A round is visible iff its manifest entry is present and parses;
+  * partially-written round directories without one are ignored on resume
+  * (the atomic-commit contract).
   */
 final class SnapshotStore(rootSpec: String,
                           hadoopConf: Configuration = new Configuration()) {
@@ -130,24 +125,11 @@ final class SnapshotStore(rootSpec: String,
     * first local-cluster run: executors looked for `target/...` bloom
     * shards inside their scratch dirs). */
   lazy val root: String = fs.makeQualified(new Path(rootSpec)).toString
-  private lazy val fc: FileContext = FileContext.getFileContext(fs.getUri, hadoopConf)
 
   /** Serializable conf for executor-side shard I/O (SeenSet). */
   lazy val confSer: HadoopConfSer = new HadoopConfSer(hadoopConf)
 
-  /** Resolved manifest commit mode ("rename" | "log") — see class doc. */
-  lazy val commitMode: String =
-    hadoopConf.get("graft.snapshot.commit.mode") match {
-      case m @ ("rename" | "log") => m
-      case null | "" | "auto" =>
-        // fs.getUri, not fs.getScheme — RawLocalFileSystem (and other
-        // pre-2.8-era FS impls) leave getScheme unimplemented
-        if (SnapshotStore.ObjectStoreSchemes(fs.getUri.getScheme)) "log" else "rename"
-      case other => throw new IllegalArgumentException(
-        s"graft.snapshot.commit.mode=$other (expected rename|log|auto)")
-    }
-
-  /** Minimum age (ms, by the entry's store mtime) a TORN log-mode entry
+  /** Minimum age (ms, by the entry's store mtime) a TORN manifest entry
     * must reach before a competing committer reclaims its round's name —
     * a liveness/politeness knob bounding how long a stalled committer
     * keeps a round hostage, NOT the safety argument (single-winner safety
@@ -159,8 +141,6 @@ final class SnapshotStore(rootSpec: String,
     Option(hadoopConf.get("graft.snapshot.takeover.ms"))
       .map(_.toLong).getOrElse(60000L)
 
-  def manifestPath: Path = new Path(root, "manifest.jsonl")
-  private def manifestTmpPath: Path = new Path(root, ".manifest.tmp")
   def manifestLogDir: Path = new Path(root, "manifest.d")
   def roundDir(r: Int): String = s"$root/round=$r"
   def frontierPath(r: Int): String = s"${roundDir(r)}/frontier"
@@ -212,14 +192,14 @@ final class SnapshotStore(rootSpec: String,
   }
 
   /** Whole-file read, retrying torn reads. On a checksummed FS
-    * (LocalFileSystem keeps `.crc` siblings) the rename-mode committer
-    * replaces the data file and its checksum sibling in TWO separate
-    * renames, so a reader racing a live commit can observe new data
-    * against the old checksum and get a ChecksumException — found by
-    * DriverKillSpec's manifest poll against a crawling subprocess. The
-    * committed content itself is never torn (rename swaps whole files),
-    * so a short-pause retry re-reads a consistent pair; a persistent
-    * mismatch (real corruption) still surfaces after the retries. */
+    * (LocalFileSystem keeps `.crc` siblings) an entry's data file and its
+    * checksum sibling are separate files, so a reader racing a live
+    * create — or a torn entry's reclaim — can observe data against a
+    * checksum that does not match it yet and get a ChecksumException.
+    * A committed entry is immutable, so a short-pause retry re-reads a
+    * consistent pair; a persistent mismatch still surfaces after the
+    * retries (and [[manifestLines]] then treats the entry as
+    * uncommitted). */
   private def readFileText(p: Path): String = {
     var attempt = 0
     while (true) {
@@ -236,7 +216,7 @@ final class SnapshotStore(rootSpec: String,
     throw new IllegalStateException("unreachable")
   }
 
-  /** Immutable-entry cache for `log` mode: a PARSEABLE `manifest.d/`
+  /** Immutable-entry cache: a PARSEABLE `manifest.d/`
     * object is never rewritten (exclusive-create CAS; the crashed-entry
     * reclaim in [[commit]] only ever replaces a persistently-TORN
     * occupant, via delete + exclusive create), so its text can be cached
@@ -274,126 +254,50 @@ final class SnapshotStore(rootSpec: String,
   @volatile private var currentTableId: String = ""
 
   /** Committed manifest entries as raw JSON lines, in round order.
-    * `log` mode lists `manifest.d/` (names sort by zero-padded round;
-    * uuid suffix tiebreaks a duplicate round deterministically — first
-    * name wins, later duplicates are dropped) and skips any entry that
-    * fails to parse: an in-flight or torn PUT is simply not committed
-    * yet, the same contract as a data dir without a manifest line. */
-  private def manifestLines(): Seq[String] = commitMode match {
-    case "log" =>
-      if (!fs.exists(manifestLogDir)) {
-        // cross-mode guard: a rename-mode snapshot must not silently read
-        // as "no commits" under log mode (and vice versa below)
-        require(!fs.exists(manifestPath),
-          s"$root has a rename-mode manifest (manifest.jsonl) but commit " +
-            "mode resolved to 'log'; set graft.snapshot.commit.mode=rename " +
-            "to read it")
-        return Seq.empty
-      }
-      val listing = fs.listStatus(manifestLogDir).toSeq
-      val tableId = listing.map(_.getPath.getName)
-        .filter(_.startsWith("_table-")).sorted.headOption.getOrElse("")
-      currentTableId = tableId
-      val files = listing
-        .filter(_.getPath.getName.endsWith(".json"))
-        .sortBy(_.getPath.getName)
-      val seenRounds = scala.collection.mutable.Set.empty[Int]
-      files.flatMap { st =>
-        val p = st.getPath
-        // torn/in-flight PUT (unparseable, or persistently checksum-torn
-        // because the writer is mid-create): simply not committed yet
-        val parsed = logEntryCache.get(p.getName)
-          .collect { case (tid, len, mt, round, text)
-            if tid == tableId && len == st.getLen &&
-              mt == st.getModificationTime => (round, text) }
-          .orElse {
-            try {
-              val text = readFileText(p).trim
-              val round = mapper.readTree(text).get("round").asInt()
-              logEntryCache.put(p.getName,
-                (tableId, st.getLen, st.getModificationTime, round, text))
-              Some((round, text))
-            } catch { case _: Exception => None }
-          }
-        parsed.collect { case (round, text) if seenRounds.add(round) => text }
-      }
-    case _ =>
-      // A committer's rename-with-OVERWRITE is atomic on HDFS (native
-      // rename2) but NOT on the local FS: AbstractFileSystem's default
-      // renameInternal(overwrite=true) DELETES the destination first, so
-      // every commit has a window where manifest.jsonl does not exist —
-      // found live by LiveReaderSpec (a poll observed 6 committed rounds,
-      // then 0). A reader must not mistake that window for "no commits":
-      // retry a transient absence (and an open racing the delete) before
-      // concluding the store is genuinely fresh.
-      //
-      // Fresh-store fast paths (review finding: every read of a store
-      // with no commits — including each crawl's own FIRST commit, which
-      // reads the manifest before appending — burned the full ~300 ms of
-      // retry sleeps): (a) no root dir ⇒ no commit ever started; (b) the
-      // committer maintains `manifest.jsonl ∨ .manifest.tmp exists` at
-      // every instant of a commit (tmp is written and closed BEFORE the
-      // delete-then-rename swap, and the swap's rename is the atomic
-      // step that makes the manifest reappear), so observing manifest
-      // absent ∧ tmp absent means no commit is in flight — conclude
-      // fresh without sleeping. The one theoretical hole — an ENTIRE
-      // commit (tmp create→write→close→swap) completing between the two
-      // sub-millisecond exists() calls — is narrower than the old
-      // fixed-retry scheme's (any commit window longer than 300 ms).
-      if (!fs.exists(new Path(root))) return Seq.empty
-      var attempt = 0
-      while (true) {
-        if (fs.exists(manifestPath)) {
-          try return readFileText(manifestPath).linesIterator.filter(_.nonEmpty).toSeq
-          catch {
-            case _: java.io.FileNotFoundException if attempt < 5 => // deleted under us
-          }
-          // tmp absent alone is not enough: a commit completing between
-          // the two checks leaves tmp absent with the manifest BACK —
-          // re-check it so that case loops and reads instead of
-          // concluding fresh
-        } else if (!fs.exists(manifestTmpPath) && !fs.exists(manifestPath)) {
-          require(!fs.exists(manifestLogDir),
-            s"$root has a log-mode manifest (manifest.d/) but commit mode " +
-              "resolved to 'rename'; set graft.snapshot.commit.mode=log to " +
-              "read it")
-          return Seq.empty
-        } else if (attempt >= 5) {
-          // manifest stayed absent with .manifest.tmp present across the
-          // whole retry window. A LIVE committer's delete→rename swap is
-          // sub-millisecond, so this is a CRASHED commit (e.g. driver
-          // SIGKILL between the local FS's delete and rename halves of
-          // rename-with-OVERWRITE) — and the committer's protocol writes
-          // tmp fully and closes it BEFORE the swap, so tmp holds the
-          // complete manifest. Returning "fresh" here would be data
-          // loss: the next commit() would compute existing="" and
-          // permanently truncate the multi-round history (review
-          // finding). Read tmp instead, keeping the longest prefix of
-          // parseable lines: a torn TAIL is only reachable when the
-          // committer died mid-tmp-write on a store whose manifest never
-          // existed (otherwise the manifest would still be present), so
-          // dropping it drops nothing that was ever committed.
+    * Lists `manifest.d/` (names sort by zero-padded round; uuid suffix
+    * tiebreaks a duplicate round deterministically — first name wins,
+    * later duplicates are dropped) and skips any entry that fails to
+    * parse: an in-flight or torn PUT is simply not committed yet, the
+    * same contract as a data dir without a manifest entry. */
+  private def manifestLines(): Seq[String] = {
+    if (!fs.exists(manifestLogDir)) {
+      // a store from before the single commit protocol keeps its history
+      // in manifest.jsonl — it must not silently read as "no commits"
+      require(!fs.exists(new Path(root, "manifest.jsonl")),
+        s"$root has a manifest.jsonl: the store predates the single " +
+          "manifest.d/ commit protocol and cannot be read by this version")
+      return Seq.empty
+    }
+    val listing = fs.listStatus(manifestLogDir).toSeq
+    val tableId = listing.map(_.getPath.getName)
+      .filter(_.startsWith("_table-")).sorted.headOption.getOrElse("")
+    currentTableId = tableId
+    val files = listing
+      .filter(_.getPath.getName.endsWith(".json"))
+      .sortBy(_.getPath.getName)
+    val seenRounds = scala.collection.mutable.Set.empty[Int]
+    files.flatMap { st =>
+      val p = st.getPath
+      // torn/in-flight PUT (unparseable, or persistently checksum-torn
+      // because the writer is mid-create): simply not committed yet
+      val parsed = logEntryCache.get(p.getName)
+        .collect { case (tid, len, mt, round, text)
+          if tid == tableId && len == st.getLen &&
+            mt == st.getModificationTime => (round, text) }
+        .orElse {
           try {
-            val lines = readFileText(manifestTmpPath)
-              .linesIterator.filter(_.nonEmpty).toSeq
-            return lines.takeWhile { l =>
-              try { mapper.readTree(l); true }
-              catch { case _: Exception => false }
-            }
-          } catch {
-            case _: java.io.FileNotFoundException =>
-              // the committer finished its swap after all — the manifest
-              // is back; restart the retry budget and read it
-              attempt = 0
-          }
+            val text = readFileText(p).trim
+            val round = mapper.readTree(text).get("round").asInt()
+            logEntryCache.put(p.getName,
+              (tableId, st.getLen, st.getModificationTime, round, text))
+            Some((round, text))
+          } catch { case _: Exception => None }
         }
-        attempt += 1
-        Thread.sleep(20L * attempt)
-      }
-      throw new IllegalStateException("unreachable")
+      parsed.collect { case (round, text) if seenRounds.add(round) => text }
+    }
   }
 
-  /** Rounds with a committed manifest line, ascending. */
+  /** Rounds with a committed manifest entry, ascending. */
   def committedRounds(): Seq[Int] =
     manifestLines().map(l => mapper.readTree(l).get("round").asInt())
 
@@ -404,13 +308,13 @@ final class SnapshotStore(rootSpec: String,
       mapper.readValue(l, classOf[java.util.Map[String, Any]]).asScala.toMap
     }
 
-  /** Test-only injection point: runs between the log-mode CAS
+  /** Test-only injection point: runs between the commit's CAS
     * precondition and the exclusive create, so a spec can land a
     * competing same-round entry inside the race window deterministically
     * (the FaultInjection pattern). A no-op in production. */
   private[graft] var beforeLogCreate: () => Unit = () => ()
 
-  /** Test-only injection point: runs between the log-mode exclusive
+  /** Test-only injection point: runs between the commit's exclusive
     * create and the payload write — the stalled-committer window the
     * reclaim protocol (delete + exclusive create + universal read-back)
     * must fence. A no-op in production. */
@@ -422,11 +326,11 @@ final class SnapshotStore(rootSpec: String,
     * the loser gets [[CommitConflictException]] instead of silently
     * forking or truncating the history.
     *
-    *  - Both modes check the CAS precondition first: committing round R
-    *    against a store whose last committed round is already >= R is a
-    *    lost race (the competing driver advanced the store) — fail before
-    *    writing anything.
-    *  - `log` mode commits round R by EXCLUSIVE CREATE of the round's
+    *  - The CAS precondition comes first: committing round R against a
+    *    store whose last committed round is already >= R is a lost race
+    *    (the competing driver advanced the store) — fail before writing
+    *    anything.
+    *  - Round R then commits by EXCLUSIVE CREATE of the round's
     *    fixed name (`r%09d.json`, `create(overwrite=false)`) — a true
     *    compare-and-swap wherever exclusive create is atomic: HDFS and
     *    the local FS (namenode/kernel-arbitrated), and object stores
@@ -461,22 +365,10 @@ final class SnapshotStore(rootSpec: String,
     *    the same caveat Iceberg documents for its Hadoop tables. (On S3
     *    proper, create and close are one atomic PUT — torn entries cannot
     *    exist, so the reclaim path never runs.)
-    *  - `rename` mode keeps the single-live-committer contract of
-    *    Iceberg's own Hadoop tables (whose docs require an external lock
-    *    manager for concurrent writers): the whole-manifest
-    *    read-append-swap cannot detect a racer that swaps AFTER this
-    *    committer's own swap, so the precondition CAS is best-effort
-    *    detection only — it catches the split-brain driver that fell
-    *    behind (the common case: both resumed from round R and the other
-    *    committed R+1 first), not a sub-millisecond photo finish.
-    *    Deployments that need true concurrent committers use `log` mode.
     *
-    * Mechanics per mode: `rename` rewrites the manifest to a temp file
-    * and swaps with rename-with-OVERWRITE (atomic on HDFS; on the local
-    * FS the OVERWRITE is delete-then-rename, so readers tolerate the
-    * brief missing-file window — see manifestLines). `log` creates ONE
-    * immutable fixed-per-round object — no rename anywhere on the path,
-    * safe on object stores (see class doc).
+    * Each commit creates ONE immutable fixed-per-round object — no rename
+    * anywhere on the path, so the same commit is safe on the local FS,
+    * HDFS and object stores (see class doc).
     *
     * Idempotent retry: re-committing a byte-identical entry that already
     * won its round returns success (a driver that crashed between a
@@ -486,11 +378,10 @@ final class SnapshotStore(rootSpec: String,
     * looked up anywhere in the history, not only at the tail. */
   def commit(entryJson: String): Unit = {
     val round = mapper.readTree(entryJson).get("round").asInt()
-    // CAS precondition (both modes): the manifest read is free in rename
-    // mode (the swap needs the existing lines anyway) and cheap in log
-    // mode (immutable-entry cache — only unseen names are GET). Returns
-    // true when the store already holds THIS exact entry (idempotent
-    // retry of our own win — succeed without writing).
+    // CAS precondition: the manifest read is cheap (immutable-entry
+    // cache — only unseen names are GET). Returns true when the store
+    // already holds THIS exact entry (idempotent retry of our own win —
+    // succeed without writing).
     def alreadyCommitted(lines: Seq[String]): Boolean = {
       val parsed = lines.map(l => (mapper.readTree(l).get("round").asInt(), l))
       if (!parsed.lastOption.exists(_._1 >= round)) return false
@@ -516,138 +407,119 @@ final class SnapshotStore(rootSpec: String,
             "attempt wrote nothing")
       }
     }
-    commitMode match {
-      case "log" =>
-        if (alreadyCommitted(manifestLines())) return
-        fs.mkdirs(manifestLogDir)
-        if (currentTableId.isEmpty) {
-          // first commit of this table (or a legacy table predating
-          // markers): stamp the table's identity. Uniquely NAMED, so it
-          // rides every reader's listing; two racing first committers
-          // both resolve the canonical id as the smallest marker name.
-          val marker = s"_table-${java.util.UUID.randomUUID().toString.take(8)}"
-          fs.create(new Path(manifestLogDir, marker), false).close()
-          currentTableId = fs.listStatus(manifestLogDir).toSeq
-            .map(_.getPath.getName).filter(_.startsWith("_table-"))
-            .sorted.headOption.getOrElse(marker)
-        }
-        beforeLogCreate()
-        val name = f"r$round%09d.json"
-        val entryPath = new Path(manifestLogDir, name)
-        val payload = (entryJson + "\n").getBytes(StandardCharsets.UTF_8)
-        // self-cache under the LISTING's validity key (len, mtime) — one
-        // getFileStatus per commit buys the committer's own future reads
-        def won(): Unit = {
-          val st = fs.getFileStatus(entryPath)
-          logEntryCache.put(name,
-            (currentTableId, st.getLen, st.getModificationTime, round,
-              entryJson.trim))
-        }
-        // an entry is committed iff it parses to a real JSON object — an
-        // EMPTY file (a writer stalled right after its create, before any
-        // byte of payload) parses to Jackson's MissingNode without
-        // throwing, and must adjudicate as torn, not as a foreign commit
-        def parseable(s: String): Boolean =
-          try {
-            val n = mapper.readTree(s)
-            n != null && !n.isMissingNode
-          } catch { case _: Exception => false }
-        // Read-back-after-close, on EVERY win path: if this committer
-        // stalled past the takeover gate between its create and its
-        // close (GC pause, S3 retry storm), a reclaiming competitor may
-        // have deleted the torn entry and exclusive-created its own —
-        // in which case OUR late bytes went to the unlinked inode (local
-        // FS) or our close already threw (HDFS: the delete revoked our
-        // lease), and the visible entry is theirs. Without this check
-        // the stalled committer concludes it won too (review finding:
-        // the old overwrite-based takeover let BOTH committers win).
-        def verifyWon(): Unit = {
-          val back = try readFileText(entryPath).trim catch { case _: Exception => "" }
-          if (back != entryJson.trim)
-            throw new CommitConflictException(
-              s"commit of round $round lost a stale-entry reclaim race on " +
-                s"$name under $root/manifest.d: this committer stalled past " +
-                "graft.snapshot.takeover.ms mid-commit and a competitor " +
-                "reclaimed the round — this attempt's entry is not visible")
-          won()
-        }
-        try {
-          val out = fs.create(entryPath, false) // the CAS: exclusive create
-          afterLogCreate()
-          try out.write(payload) finally out.close()
-          verifyWon()
-        } catch {
-          case _: java.io.IOException if fs.exists(entryPath) =>
-            // the round's name is occupied: a completed competitor, a
-            // live competitor mid-write, or a crashed committer's torn
-            // entry. Adjudicate: a parseable occupant settles it; a torn
-            // occupant younger than the takeover gate gets waited out (a
-            // live writer closes in ms — the gate bounds how long a
-            // stalled one keeps the round); a torn occupant OLDER than
-            // the gate is a crashed commit's debris and is reclaimed by
-            // DELETE + EXCLUSIVE CREATE — never overwrite: the delete
-            // revokes a late writer's lease (HDFS) or unlinks the inode
-            // its stream writes to (local FS), so its bytes can never
-            // surface at the committed name, and its own verifyWon()
-            // sees our entry and throws. The gate (default 60 s) is a
-            // LIVENESS knob, not the safety argument — arbitration comes
-            // from the exclusive create + universal read-back.
-            var done = false
-            while (!done) {
-              val existing =
-                try Some(readFileText(entryPath))
-                catch { case _: Exception => None }
-              existing.filter(parseable) match {
-                case Some(text) if text.trim == entryJson.trim =>
-                  done = true; won() // idempotent retry of our own win
-                case Some(_) =>
-                  throw new CommitConflictException(
-                    s"commit of round $round lost to a concurrent " +
-                      s"committer: $name already committed under " +
-                      s"$root/manifest.d — this attempt wrote nothing")
-                case None =>
-                  val age =
-                    try Some(System.currentTimeMillis() -
-                      fs.getFileStatus(entryPath).getModificationTime)
-                    catch { case _: java.io.FileNotFoundException => None }
-                  age match {
-                    case Some(a) if a < takeoverMs =>
-                      Thread.sleep(50L) // young torn entry: ride out the writer
-                    case _ =>
-                      // stale torn debris (or vanished under a competing
-                      // reclaimer): reclaim the round's name
-                      try { fs.delete(entryPath, false); () }
-                      catch { case _: java.io.IOException => () }
-                      try {
-                        val out = fs.create(entryPath, false)
-                        try out.write(payload) finally out.close()
-                        verifyWon()
-                        done = true
-                      } catch {
-                        case _: java.io.IOException if fs.exists(entryPath) =>
-                          () // another reclaimer won the create — loop and adjudicate
-                      }
+    if (alreadyCommitted(manifestLines())) return
+    fs.mkdirs(manifestLogDir)
+    if (currentTableId.isEmpty) {
+      // first commit of this table (or a legacy table predating
+      // markers): stamp the table's identity. Uniquely NAMED, so it
+      // rides every reader's listing; two racing first committers
+      // both resolve the canonical id as the smallest marker name.
+      val marker = s"_table-${java.util.UUID.randomUUID().toString.take(8)}"
+      fs.create(new Path(manifestLogDir, marker), false).close()
+      currentTableId = fs.listStatus(manifestLogDir).toSeq
+        .map(_.getPath.getName).filter(_.startsWith("_table-"))
+        .sorted.headOption.getOrElse(marker)
+    }
+    beforeLogCreate()
+    val name = f"r$round%09d.json"
+    val entryPath = new Path(manifestLogDir, name)
+    val payload = (entryJson + "\n").getBytes(StandardCharsets.UTF_8)
+    // self-cache under the LISTING's validity key (len, mtime) — one
+    // getFileStatus per commit buys the committer's own future reads
+    def won(): Unit = {
+      val st = fs.getFileStatus(entryPath)
+      logEntryCache.put(name,
+        (currentTableId, st.getLen, st.getModificationTime, round,
+          entryJson.trim))
+    }
+    // an entry is committed iff it parses to a real JSON object — an
+    // EMPTY file (a writer stalled right after its create, before any
+    // byte of payload) parses to Jackson's MissingNode without
+    // throwing, and must adjudicate as torn, not as a foreign commit
+    def parseable(s: String): Boolean =
+      try {
+        val n = mapper.readTree(s)
+        n != null && !n.isMissingNode
+      } catch { case _: Exception => false }
+    // Read-back-after-close, on EVERY win path: if this committer
+    // stalled past the takeover gate between its create and its
+    // close (GC pause, S3 retry storm), a reclaiming competitor may
+    // have deleted the torn entry and exclusive-created its own —
+    // in which case OUR late bytes went to the unlinked inode (local
+    // FS) or our close already threw (HDFS: the delete revoked our
+    // lease), and the visible entry is theirs. Without this check
+    // the stalled committer concludes it won too (review finding:
+    // the old overwrite-based takeover let BOTH committers win).
+    def verifyWon(): Unit = {
+      val back = try readFileText(entryPath).trim catch { case _: Exception => "" }
+      if (back != entryJson.trim)
+        throw new CommitConflictException(
+          s"commit of round $round lost a stale-entry reclaim race on " +
+            s"$name under $root/manifest.d: this committer stalled past " +
+            "graft.snapshot.takeover.ms mid-commit and a competitor " +
+            "reclaimed the round — this attempt's entry is not visible")
+      won()
+    }
+    try {
+      val out = fs.create(entryPath, false) // the CAS: exclusive create
+      afterLogCreate()
+      try out.write(payload) finally out.close()
+      verifyWon()
+    } catch {
+      case _: java.io.IOException if fs.exists(entryPath) =>
+        // the round's name is occupied: a completed competitor, a
+        // live competitor mid-write, or a crashed committer's torn
+        // entry. Adjudicate: a parseable occupant settles it; a torn
+        // occupant younger than the takeover gate gets waited out (a
+        // live writer closes in ms — the gate bounds how long a
+        // stalled one keeps the round); a torn occupant OLDER than
+        // the gate is a crashed commit's debris and is reclaimed by
+        // DELETE + EXCLUSIVE CREATE — never overwrite: the delete
+        // revokes a late writer's lease (HDFS) or unlinks the inode
+        // its stream writes to (local FS), so its bytes can never
+        // surface at the committed name, and its own verifyWon()
+        // sees our entry and throws. The gate (default 60 s) is a
+        // LIVENESS knob, not the safety argument — arbitration comes
+        // from the exclusive create + universal read-back.
+        var done = false
+        while (!done) {
+          val existing =
+            try Some(readFileText(entryPath))
+            catch { case _: Exception => None }
+          existing.filter(parseable) match {
+            case Some(text) if text.trim == entryJson.trim =>
+              done = true; won() // idempotent retry of our own win
+            case Some(_) =>
+              throw new CommitConflictException(
+                s"commit of round $round lost to a concurrent " +
+                  s"committer: $name already committed under " +
+                  s"$root/manifest.d — this attempt wrote nothing")
+            case None =>
+              val age =
+                try Some(System.currentTimeMillis() -
+                  fs.getFileStatus(entryPath).getModificationTime)
+                catch { case _: java.io.FileNotFoundException => None }
+              age match {
+                case Some(a) if a < takeoverMs =>
+                  Thread.sleep(50L) // young torn entry: ride out the writer
+                case _ =>
+                  // stale torn debris (or vanished under a competing
+                  // reclaimer): reclaim the round's name
+                  try { fs.delete(entryPath, false); () }
+                  catch { case _: java.io.IOException => () }
+                  try {
+                    val out = fs.create(entryPath, false)
+                    try out.write(payload) finally out.close()
+                    verifyWon()
+                    done = true
+                  } catch {
+                    case _: java.io.IOException if fs.exists(entryPath) =>
+                      () // another reclaimer won the create — loop and adjudicate
                   }
               }
-            }
-          case ioe: java.io.IOException => throw ioe // real I/O failure
+          }
         }
-      case _ =>
-        fs.mkdirs(new Path(root))
-        val lines = manifestLines()
-        if (alreadyCommitted(lines)) return
-        val existing = lines.mkString("", "\n", "\n") match {
-          case "\n" => ""
-          case s => s
-        }
-        // readers rely on the invariant that manifest ∨ tmp exists at every
-        // instant from here to the swap (see manifestLines' fresh-store
-        // fast path)
-        val tmp = manifestTmpPath
-        val out = fs.create(tmp, true)
-        try out.write((existing + entryJson + "\n").getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-        fc.rename(tmp, manifestPath, Options.Rename.OVERWRITE)
+      case ioe: java.io.IOException => throw ioe // real I/O failure
     }
   }
 
@@ -795,13 +667,6 @@ final class SnapshotStore(rootSpec: String,
   def liveSeenPaths(): Seq[String] =
     readManifest().lastOption.map(pathsOf(_, "seen_paths")).getOrElse(Seq.empty)
 
-  /** Partition/shard count the snapshot was written with (0 = unknown,
-    * pre-round-2 manifests). */
-  def livePartitions(): Int =
-    readManifest().lastOption
-      .flatMap(e => Option(e.getOrElse("partitions", null)))
-      .map(_.asInstanceOf[Number].intValue()).getOrElse(0)
-
   /** Live retire-tombstone parquet paths (url_hash, retire_round) as of
     * the last committed round — empty when no un-compacted retire exists
     * (the common case; pre-tombstone manifests simply lack the field). */
@@ -933,12 +798,3 @@ final class SnapshotStore(rootSpec: String,
   }
 }
 
-object SnapshotStore {
-  /** Schemes whose rename is copy+delete (or absent) — manifest commit
-    * defaults to the immutable `log` mode on these. Conservative list of
-    * the Hadoop object-store connectors; anything unknown keeps `rename`
-    * (override with graft.snapshot.commit.mode=log). */
-  val ObjectStoreSchemes: Set[String] =
-    Set("s3", "s3a", "s3n", "gs", "wasb", "wasbs", "abfs", "abfss",
-        "oss", "cos", "cosn", "swift", "obs")
-}

@@ -44,8 +44,7 @@ object CrawlOps {
     // (measured at c32: smoke q09 35.2 → 19.6 s, q37 25.7 → 16.0 s with
     // p=8). The crawl result is partition-invariant (pinned by the
     // oracle-equality tests), so only wall time moves.
-    val dataSized = math.min(partitions, math.max(8, tier.docs / 625))
-    val p = sys.env.get("GRAFT_CRAWL_PARTITIONS").map(_.toInt).getOrElse(dataSized)
+    val p = math.min(partitions, math.max(8, tier.docs / 625))
     CrawlConfig(maxDepth = 10, perHostPerRound = perHost, partitions = p,
       bloomShardCapacity = math.max(100000L, tier.docs.toLong))
   }

@@ -385,28 +385,6 @@ class CrawlEngineSpec extends SparkTestBase {
     assert(summary.totalSeen == eF.seen().count())
   }
 
-  test("log-mode manifest commits: full crawl + resume, byte-identical to " +
-      "the rename-mode crawl") {
-    // object-store commit path (SnapshotStore `log` mode): every round's
-    // manifest entry is one immutable object, no rename in the commit
-    // path; resume reads the manifest by listing. Equality against the
-    // default-mode engine pins that commit mode changes ONLY durability
-    // mechanics, never crawl semantics.
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("graft.snapshot.commit.mode", "log")
-    try {
-      val eL = new CrawlEngine(spark, fixtureDir, snapDir("logmode"), cfg)
-      assert(eL.store.commitMode == "log")
-      eL.runFresh(maxRounds = 3)
-      val resumed = eL.resume() // exercises manifest listing mid-crawl
-      assert(resumed.rounds == engine.store.lastCommitted().get)
-      assert(collectLog(eL) == collectLog(engine))
-      assert(collectSeen(eL) == collectSeen(engine))
-      assert(!eL.store.fs.exists(eL.store.manifestPath),
-        "log mode must not write the rename-mode manifest file")
-    } finally hc.unset("graft.snapshot.commit.mode")
-  }
-
   test("robots: no fetched URL is disallowed, and some were denied") {
     val fetchedPaths = oracleResult.log.map(f => graft.urls.UrlCanon.pathOf(f.urlCanon))
     assert(fetchedPaths.forall(!_.startsWith("/blocked")))

@@ -14,19 +14,16 @@ object GraftSubprocess {
     ClusterCheck.OpenedModules.flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   /** Launch `mainClass` in a fresh JVM with this JVM's classpath, stdout
-    * and stderr redirected to `log`. `sysProps` are extra `-D...=...`
-    * arguments (e.g. a commit-mode override); `env` extra environment
+    * and stderr redirected to `log`. `env` holds extra environment
     * variables (e.g. SPARK_SCALA_VERSION for local-cluster executor
     * forks, SPARK_GRAFT_* crawl config). */
   def start(mainClass: String, args: Seq[String], log: java.io.File,
-            env: Map[String, String] = Map.empty,
-            sysProps: Seq[String] = Nil): Process = {
+            env: Map[String, String] = Map.empty): Process = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
       "-Xmx4g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC") ++ sysProps ++
-      Seq("-cp", cp, mainClass) ++ args
+      "-Dspark.sql.session.timeZone=UTC", "-cp", cp, mainClass) ++ args
     log.getParentFile.mkdirs()
     val pb = new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)

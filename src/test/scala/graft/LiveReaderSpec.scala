@@ -12,82 +12,55 @@ import java.util.concurrent.TimeUnit
   * (Iceberg-style): every read resolves from committed manifest entries
   * only, committed entries reference immutable files, so a concurrent
   * reader never crashes, never sees a torn state, and its successive
-  * observations are monotone. Exercised for BOTH commit modes — rename
-  * (HDFS-style manifest swap) and log (the object-store path: immutable
-  * manifest.d/ entries, torn in-flight PUTs skipped). This guarantee
-  * class is where two real bugs fell: the data/.crc checksum window and
-  * the local-FS OVERWRITE-rename delete window (both fixed in
-  * SnapshotStore, both found by polls exactly like this one). */
+  * observations are monotone. Readers list the immutable `manifest.d/`
+  * entries and skip torn in-flight PUTs. */
 class LiveReaderSpec extends SparkTestBase {
 
-  test("rename mode: fetchLog/seen/committedRounds polled from another " +
-      "JVM during a live crawl — no errors, monotone counts, exact final state") {
-    runLive("rename")
-  }
-
   test("log mode (object-store commit path): same live-reader contract") {
-    runLive("log")
-  }
-
-  private def runLive(mode: String): Unit = {
     val fixtureDir = CorpusGen.ensure(spark, CorpusGen.Smoke)
     val cfg = CrawlConfig(maxDepth = 10, perHostPerRound = 25, partitions = 8)
-    val snap = s"target/live-reader/snap-$mode"
+    val snap = "target/live-reader/snap"
     val fs = new HPath(snap).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new HPath(snap), true)
 
-    val log = new java.io.File(s"target/live-reader/crawl-$mode.log")
+    val log = new java.io.File("target/live-reader/crawl.log")
     val p = GraftSubprocess.start("graft.CrawlMain",
       Seq("/root/testdata/sf0.001", snap, "fresh"), log,
       env = Map(
         "SPARK_GRAFT_MAX_DEPTH" -> cfg.maxDepth.toString,
         "SPARK_GRAFT_PER_HOST" -> cfg.perHostPerRound.toString,
-        "SPARK_GRAFT_PARTITIONS" -> cfg.partitions.toString),
-      // spark.hadoop.* session props flow into the subprocess's hadoopConf
-      sysProps = Seq(s"-Dspark.hadoop.graft.snapshot.commit.mode=$mode"))
+        "SPARK_GRAFT_PARTITIONS" -> cfg.partitions.toString))
 
-    // the reading engine must resolve the same commit mode (shared
-    // session: set on the session's hadoopConf, restored afterwards)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val prevMode = hconf.get("graft.snapshot.commit.mode")
-    hconf.set("graft.snapshot.commit.mode", mode)
+    val engine = new CrawlEngine(spark, fixtureDir, snap, cfg)
+    var lastRounds = 0
+    var lastFetched = -1L
+    var lastSeen = -1L
+    var distinctStates = 0
+    val deadline = System.nanoTime() + TimeUnit.MINUTES.toNanos(6)
     try {
-      val engine = new CrawlEngine(spark, fixtureDir, snap, cfg)
-      var lastRounds = 0
-      var lastFetched = -1L
-      var lastSeen = -1L
-      var distinctStates = 0
-      val deadline = System.nanoTime() + TimeUnit.MINUTES.toNanos(6)
-      try {
-        while (p.isAlive && System.nanoTime() < deadline) {
-          // every read below races the subprocess's commits; any crash or
-          // backwards step here is a broken reader contract
-          val rounds = engine.store.committedRounds().size
-          val fetched = engine.fetchLog().count()
-          val seenN = engine.seen().count()
-          assert(rounds >= lastRounds, s"rounds went backwards: $lastRounds -> $rounds")
-          assert(fetched >= lastFetched, s"fetchLog shrank: $lastFetched -> $fetched")
-          assert(seenN >= lastSeen, s"seen shrank: $lastSeen -> $seenN")
-          if (rounds > lastRounds) distinctStates += 1
-          lastRounds = rounds; lastFetched = fetched; lastSeen = seenN
-        }
-      } finally if (p.isAlive) p.destroyForcibly()
-      assert(p.waitFor(30, TimeUnit.SECONDS) && p.exitValue() == 0,
-        s"crawl subprocess failed ($mode); log tail:\n${tail(log)}")
-      assert(distinctStates >= 3,
-        s"poll observed only $distinctStates distinct committed states — " +
-          "the reads did not actually race the crawl")
+      while (p.isAlive && System.nanoTime() < deadline) {
+        // every read below races the subprocess's commits; any crash or
+        // backwards step here is a broken reader contract
+        val rounds = engine.store.committedRounds().size
+        val fetched = engine.fetchLog().count()
+        val seenN = engine.seen().count()
+        assert(rounds >= lastRounds, s"rounds went backwards: $lastRounds -> $rounds")
+        assert(fetched >= lastFetched, s"fetchLog shrank: $lastFetched -> $fetched")
+        assert(seenN >= lastSeen, s"seen shrank: $lastSeen -> $seenN")
+        if (rounds > lastRounds) distinctStates += 1
+        lastRounds = rounds; lastFetched = fetched; lastSeen = seenN
+      }
+    } finally if (p.isAlive) p.destroyForcibly()
+    assert(p.waitFor(30, TimeUnit.SECONDS) && p.exitValue() == 0,
+      s"crawl subprocess failed; log tail:\n${GraftSubprocess.tail(log)}")
+    assert(distinctStates >= 3,
+      s"poll observed only $distinctStates distinct committed states — " +
+        "the reads did not actually race the crawl")
 
-      val want = new CrawlOracle(CorpusGen.build(CorpusGen.Smoke), cfg).run()
-      assert(engine.fetchLog().count() == want.log.size.toLong)
-      assert(engine.seen().count() == want.seen.size.toLong)
-      info(s"$mode: observed $distinctStates live states; final " +
-        s"fetched=${want.log.size} seen=${want.seen.size} matches the oracle")
-    } finally {
-      if (prevMode == null) hconf.unset("graft.snapshot.commit.mode")
-      else hconf.set("graft.snapshot.commit.mode", prevMode)
-    }
+    val want = new CrawlOracle(CorpusGen.build(CorpusGen.Smoke), cfg).run()
+    assert(engine.fetchLog().count() == want.log.size.toLong)
+    assert(engine.seen().count() == want.seen.size.toLong)
+    info(s"observed $distinctStates live states; final " +
+      s"fetched=${want.log.size} seen=${want.seen.size} matches the oracle")
   }
-
-  private def tail(f: java.io.File): String = GraftSubprocess.tail(f)
 }

@@ -31,11 +31,11 @@ object CountingFileSystem {
   val opens = new java.util.concurrent.atomic.AtomicLong(0)
 }
 
-/** Manifest commit-mode contract (SnapshotStore class doc): `log` mode
-  * must commit and read rounds without EVER invoking rename, tolerate
-  * torn in-flight entries, resolve duplicate-round races
-  * deterministically, and refuse to silently read a snapshot written in
-  * the other mode. */
+/** Manifest commit contract (SnapshotStore class doc): the store must
+  * commit and read rounds without EVER invoking rename, tolerate torn
+  * in-flight entries, resolve duplicate-round races deterministically,
+  * and refuse to silently read a store that predates the single
+  * `manifest.d/` protocol. */
 class SnapshotStoreSpec extends AnyFunSuite {
 
   private def freshDir(name: String): String = {
@@ -46,8 +46,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
   }
 
   private def confWith(kv: (String, String)*): Configuration = {
-    val c = new Configuration() // defaults loaded: rename mode needs the
-    // fs.AbstractFileSystem.file.impl binding for FileContext
+    val c = new Configuration()
     kv.foreach { case (k, v) => c.set(k, v) }
     c
   }
@@ -60,48 +59,22 @@ class SnapshotStoreSpec extends AnyFunSuite {
   test("log mode: commit + read back rounds with no rename anywhere " +
       "(rename-refusing FS)") {
     val conf = confWith(
-      "fs.norename.impl" -> classOf[NoRenameFileSystem].getName,
-      "graft.snapshot.commit.mode" -> "log")
+      "fs.norename.impl" -> classOf[NoRenameFileSystem].getName)
     val root = "norename://" + freshDir("lognorename")
     val store = new SnapshotStore(root, conf)
-    assert(store.commitMode == "log")
     (0 to 3).foreach(r => store.commit(entry(store, r, Seq(s"$root/round=$r/seen_delta"))))
     assert(store.committedRounds() == Seq(0, 1, 2, 3))
     assert(store.lastCommitted().contains(3))
     assert(store.liveSeenPaths() == Seq(s"$root/round=3/seen_delta"))
-    assert(store.livePartitions() == 2)
+    assert(store.readManifest().last("partitions") == 2)
     assert(store.metricOf(store.readManifest().last, "fetched_total") == 30.0)
-  }
-
-  test("rename mode on a rename-less FS fails loudly at commit (fail-fast, " +
-      "not silent corruption)") {
-    val conf = confWith("fs.norename.impl" -> classOf[NoRenameFileSystem].getName,
-      "graft.snapshot.commit.mode" -> "rename")
-    val store = new SnapshotStore("norename://" + freshDir("renamefail"), conf)
-    // either the rename itself refuses (UnsupportedOperationException) or
-    // FileContext has no AbstractFileSystem binding for the scheme — both
-    // fail the commit loudly instead of tearing the manifest
-    val ex = intercept[Exception] { store.commit(entry(store, 0, Seq.empty)) }
-    assert(ex.isInstanceOf[UnsupportedOperationException] ||
-      ex.isInstanceOf[java.io.IOException], ex.toString)
-  }
-
-  test("object-store schemes default to log mode; local defaults to rename; " +
-      "explicit conf overrides") {
-    // scheme-based defaults are resolved lazily off the root FS; local FS
-    assert(new SnapshotStore(freshDir("auto"), confWith()).commitMode == "rename")
-    assert(new SnapshotStore(freshDir("forced"),
-      confWith("graft.snapshot.commit.mode" -> "log")).commitMode == "log")
-    assert(SnapshotStore.ObjectStoreSchemes.contains("s3a"))
-    intercept[IllegalArgumentException] {
-      new SnapshotStore(freshDir("bad"),
-        confWith("graft.snapshot.commit.mode" -> "bogus")).commitMode
-    }
+    assert(!store.fs.exists(new Path(store.root, "manifest.jsonl")),
+      "commits must not write a whole-file manifest")
   }
 
   test("log mode: a torn in-flight entry is invisible (not committed), " +
       "then visible once a full entry lands") {
-    val conf = confWith("graft.snapshot.commit.mode" -> "log")
+    val conf = confWith()
     val root = freshDir("torn")
     val store = new SnapshotStore(root, conf)
     store.commit(entry(store, 0, Seq(s"$root/round=0/seen_delta")))
@@ -118,7 +91,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
 
   test("log mode: duplicate commits of the same round resolve " +
       "deterministically (first file name wins)") {
-    val conf = confWith("graft.snapshot.commit.mode" -> "log")
+    val conf = confWith()
     val root = freshDir("dup")
     val store = new SnapshotStore(root, conf)
     store.commit(entry(store, 0, Seq.empty))
@@ -137,151 +110,79 @@ class SnapshotStoreSpec extends AnyFunSuite {
       "lexicographically-first entry must win the duplicate-round race")
   }
 
-  test("cross-mode guard: a snapshot written in one mode refuses to read " +
-      "as empty under the other") {
-    val root = freshDir("crossmode")
-    val logStore = new SnapshotStore(root,
-      confWith("graft.snapshot.commit.mode" -> "log"))
-    logStore.commit(entry(logStore, 0, Seq.empty))
-    val renameStore = new SnapshotStore(root,
-      confWith("graft.snapshot.commit.mode" -> "rename"))
-    intercept[IllegalArgumentException] { renameStore.lastCommitted() }
-
-    val root2 = freshDir("crossmode2")
-    val rs2 = new SnapshotStore(root2, confWith())
-    rs2.commit(entry(rs2, 0, Seq.empty))
-    val ls2 = new SnapshotStore(root2,
-      confWith("graft.snapshot.commit.mode" -> "log"))
-    intercept[IllegalArgumentException] { ls2.lastCommitted() }
+  test("a root holding manifest.jsonl refuses to read as empty") {
+    // a store from before the single manifest.d/ protocol kept its whole
+    // history in one manifest.jsonl: reading it as "no commits" would let
+    // the next commit start a fresh history over the old rounds
+    val root = freshDir("legacymanifest")
+    val store = new SnapshotStore(root, confWith())
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "manifest.jsonl"),
+      (entry(store, 0, Seq.empty) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val ex = intercept[IllegalArgumentException] { store.lastCommitted() }
+    assert(ex.getMessage.contains("predates"), ex.getMessage)
+    intercept[IllegalArgumentException] { store.commit(entry(store, 0, Seq.empty)) }
+    assert(!new java.io.File(root, "manifest.d").exists(),
+      "a refused commit must not start a manifest.d history")
   }
 
-  test("rename mode: a reader racing a live commit's data/.crc rename " +
-      "window retries past the ChecksumException; persistent corruption " +
-      "still surfaces") {
-    // On a checksummed FS the committer's rename swaps manifest.jsonl and
-    // its .crc sibling in TWO renames; a concurrent reader can see new
-    // data against the old checksum (found live by DriverKillSpec's
-    // manifest poll). Model the window deterministically: corrupt the
-    // data bytes under the stale .crc, heal them mid-retry.
+  test("a reader racing a manifest.d entry's data/.crc window retries " +
+      "past the ChecksumException") {
+    // On a checksummed FS an entry's data file and its .crc sibling are
+    // separate files; a concurrent reader can see data against a
+    // checksum that does not match it yet. Model the window
+    // deterministically: corrupt a committed entry's bytes under its
+    // .crc, heal them mid-retry.
     val root = freshDir("crcrace")
     val store = new SnapshotStore(root, confWith())
     store.commit(entry(store, 0, Seq.empty))
-    val dataFile = java.nio.file.Paths.get(root, "manifest.jsonl")
+    val dataFile = java.nio.file.Paths.get(root, "manifest.d", "r000000000.json")
     val original = java.nio.file.Files.readAllBytes(dataFile)
     val torn = original.clone(); torn(0) = (torn(0) ^ 0x7).toByte
     java.nio.file.Files.write(dataFile, torn) // raw write: .crc now stale
 
     val healer = new Thread(() => {
       Thread.sleep(60) // inside the reader's retry window (20+40+... ms)
-      // atomic replace, like the real committer's temp+rename: an
-      // in-place write truncates first, and the reader polling mid-heal
-      // would see an EMPTY file that passes checksumming (no chunks)
-      val tmp = dataFile.resolveSibling("heal.tmp")
+      // atomic replace: an in-place write truncates first, and the
+      // reader polling mid-heal would see an EMPTY file that passes
+      // checksumming (no chunks)
+      val tmp = java.nio.file.Paths.get(root, "heal.tmp")
       java.nio.file.Files.write(tmp, original)
       java.nio.file.Files.move(tmp, dataFile,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     })
     healer.start()
-    assert(store.committedRounds() == Seq(0),
-      "reader must ride out the commit's checksum window")
+    // a fresh instance: the committer's own entry cache would skip the read
+    assert(new SnapshotStore(root, confWith()).committedRounds() == Seq(0),
+      "reader must ride out the entry's checksum window")
     healer.join()
-
-    java.nio.file.Files.write(dataFile, torn) // corrupt again, no healer
-    intercept[org.apache.hadoop.fs.ChecksumException] {
-      store.committedRounds() // bounded retries, then the truth
-    }
-    java.nio.file.Files.write(dataFile, original)
-  }
-
-  test("rename mode: a fresh store answers no-commits without retry " +
-      "sleeps; an in-flight commit (tmp present) makes readers wait") {
-    val root = freshDir("renamefresh")
-    val store = new SnapshotStore(root, confWith())
-    assert(store.commitMode == "rename")
-    // root dir exists, no manifest, no .manifest.tmp: the committer's
-    // invariant (manifest ∨ tmp at every instant of a commit) says
-    // nothing is in flight — must answer immediately, not burn the
-    // ~300 ms of retry sleeps the pre-fix code slept (paid by every
-    // first commit and every DriverKill/LiveReader poll)
-    val t0 = System.nanoTime()
-    assert(store.committedRounds().isEmpty)
-    val ms = (System.nanoTime() - t0) / 1e6
-    assert(ms < 250, s"fresh-store read took $ms ms — retry sleeps burned")
-
-    // commit-in-flight window: manifest absent but tmp present — a
-    // reader must WAIT for the swap, not conclude the store is fresh
-    val fs = store.fs
-    val tmp = new Path(root, ".manifest.tmp")
-    fs.create(tmp, true).close()
-    val line = entry(store, 0, Seq(s"$root/round=0/seen_delta"))
-    val finisher = new Thread(() => {
-      Thread.sleep(80) // inside the reader's retry window (20+40+... ms)
-      val out = fs.create(new Path(root, "manifest.jsonl"), true)
-      try out.write((line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      fs.delete(tmp, false)
-    })
-    finisher.start()
-    assert(store.committedRounds() == Seq(0),
-      "reader must wait out the in-flight commit instead of reading fresh")
-    finisher.join()
-  }
-
-  test("rename mode: a crashed swap (manifest deleted, complete tmp left) " +
-      "rolls forward — history is read back and the next commit keeps it") {
-    val root = freshDir("crashedswap")
-    val store = new SnapshotStore(root, confWith())
-    (0 to 3).foreach(r => store.commit(entry(store, r, Seq(s"$root/round=$r/seen_delta"))))
-    // simulate a driver SIGKILL between the local FS's delete and rename
-    // halves of rename-with-OVERWRITE: the complete manifest sits in
-    // .manifest.tmp and manifest.jsonl is gone
-    val fs = store.fs
-    val manifest = new Path(root, "manifest.jsonl")
-    val tmp = new Path(root, ".manifest.tmp")
-    assert(fs.rename(manifest, tmp), "test setup: move manifest into tmp")
-    // a reader must exhaust its live-commit retry window and then read
-    // tmp — NOT conclude the store is fresh (pre-fix: Seq.empty, and the
-    // next commit would truncate the history to one entry)
-    val reader = new SnapshotStore(root, confWith())
-    assert(reader.committedRounds() == Seq(0, 1, 2, 3),
-      "crashed-swap store must read back its full history from tmp")
-    // the next commit incorporates the rolled-forward history and
-    // repairs the store (manifest back, all five rounds visible fast)
-    store.commit(entry(store, 4, Seq(s"$root/round=4/seen_delta")))
-    assert(fs.exists(manifest))
-    assert(new SnapshotStore(root, confWith()).committedRounds() ==
-      Seq(0, 1, 2, 3, 4))
   }
 
   test("commit CAS precondition (both modes): committing a round the store " +
       "already has conflicts BEFORE writing; history intact; next round fine") {
-    for (mode <- Seq("rename", "log")) {
-      val root = freshDir(s"cas-$mode")
-      val store = new SnapshotStore(root,
-        confWith("graft.snapshot.commit.mode" -> mode))
-      (0 to 2).foreach(r => store.commit(entry(store, r, Seq.empty)))
-      // a split-brain driver that fell behind: its next commit targets a
-      // round the competing driver already advanced past (differing
-      // payload — a byte-identical re-commit of the LAST round is the
-      // idempotent-retry case and succeeds by design)
-      for (stale <- Seq(1, 2)) {
-        val ex = intercept[CommitConflictException] {
-          store.commit(entry(store, stale, Seq(s"$root/round=$stale/stale-attempt")))
-        }
-        assert(ex.getMessage.contains("lost to a concurrent committer"), ex.getMessage)
+    val root = freshDir("cas")
+    val store = new SnapshotStore(root, confWith())
+    (0 to 2).foreach(r => store.commit(entry(store, r, Seq.empty)))
+    // a split-brain driver that fell behind: its next commit targets a
+    // round the competing driver already advanced past (differing
+    // payload — a byte-identical re-commit of the LAST round is the
+    // idempotent-retry case and succeeds by design)
+    for (stale <- Seq(1, 2)) {
+      val ex = intercept[CommitConflictException] {
+        store.commit(entry(store, stale, Seq(s"$root/round=$stale/stale-attempt")))
       }
-      assert(store.committedRounds() == Seq(0, 1, 2), s"$mode: history damaged")
-      store.commit(entry(store, 3, Seq.empty)) // the legitimate next round
-      assert(store.committedRounds() == Seq(0, 1, 2, 3))
+      assert(ex.getMessage.contains("lost to a concurrent committer"), ex.getMessage)
     }
+    assert(store.committedRounds() == Seq(0, 1, 2), "history damaged")
+    store.commit(entry(store, 3, Seq.empty)) // the legitimate next round
+    assert(store.committedRounds() == Seq(0, 1, 2, 3))
   }
 
   test("log mode: losing the exclusive-create CAS throws CommitConflict; the " +
       "loser writes nothing; readers see the winner") {
     val root = freshDir("casrace")
     val store = new SnapshotStore(root,
-      confWith("graft.snapshot.commit.mode" -> "log"))
+      confWith())
     store.commit(entry(store, 0, Seq.empty))
     // land a competitor INSIDE the race window (after our precondition
     // read, before our exclusive create) at the round's fixed name
@@ -302,7 +203,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val round1 = dir.listFiles().map(_.getName).filter(_.startsWith("r000000001"))
     assert(round1.toSeq == Seq("r000000001.json"), round1.mkString(", "))
     assert(store.committedRounds() == Seq(0, 1))
-    assert(new SnapshotStore(root, confWith("graft.snapshot.commit.mode" -> "log"))
+    assert(new SnapshotStore(root, confWith())
       .liveSeenPaths() == Seq(s"$root/round=1/competitor"))
   }
 
@@ -314,8 +215,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // small takeover gate: the planted torn entry is fresh, and the test
     // must not wait out the production default (60 s) before reclaiming
     val store = new SnapshotStore(root,
-      confWith("graft.snapshot.commit.mode" -> "log",
-        "graft.snapshot.takeover.ms" -> "150"))
+      confWith("graft.snapshot.takeover.ms" -> "150"))
     store.commit(entry(store, 0, Seq.empty))
     val dir = new java.io.File(root, "manifest.d")
     store.beforeLogCreate = () => {
@@ -324,7 +224,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     }
     try store.commit(entry(store, 1, Seq(s"$root/round=1/ours")))
     finally store.beforeLogCreate = () => ()
-    assert(new SnapshotStore(root, confWith("graft.snapshot.commit.mode" -> "log"))
+    assert(new SnapshotStore(root, confWith())
       .liveSeenPaths() == Seq(s"$root/round=1/ours"))
 
     // live-writer case: the occupant's torn entry COMPLETES inside the
@@ -332,7 +232,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // not take over
     val root2 = freshDir("tornlive")
     val store2 = new SnapshotStore(root2,
-      confWith("graft.snapshot.commit.mode" -> "log"))
+      confWith())
     store2.commit(entry(store2, 0, Seq.empty))
     val dir2 = new java.io.File(root2, "manifest.d")
     val competitor = entry(store2, 1, Seq(s"$root2/round=1/competitor"))
@@ -355,7 +255,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
         store2.commit(entry(store2, 1, Seq(s"$root2/round=1/loser")))
       }
     } finally store2.beforeLogCreate = () => ()
-    assert(new SnapshotStore(root2, confWith("graft.snapshot.commit.mode" -> "log"))
+    assert(new SnapshotStore(root2, confWith())
       .liveSeenPaths() == Seq(s"$root2/round=1/competitor"))
   }
 
@@ -363,8 +263,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
       "reclaimed — the reclaimer wins ALONE and the stalled one gets a " +
       "conflict from its read-back, never a false win") {
     val root = freshDir("stalledreclaim")
-    val conf = confWith("graft.snapshot.commit.mode" -> "log",
-      "graft.snapshot.takeover.ms" -> "150")
+    val conf = confWith("graft.snapshot.takeover.ms" -> "150")
     val stalled = new SnapshotStore(root, conf)
     val reclaimer = new SnapshotStore(root, conf)
     stalled.commit(entry(stalled, 0, Seq.empty))
@@ -399,32 +298,29 @@ class SnapshotStoreSpec extends AnyFunSuite {
 
   test("idempotent retry of a round the store has advanced PAST succeeds " +
       "byte-identically and conflicts otherwise (both modes)") {
-    for (mode <- Seq("rename", "log")) {
-      val root = freshDir(s"idempast-$mode")
-      val store = new SnapshotStore(root,
-        confWith("graft.snapshot.commit.mode" -> mode))
-      val e1 = entry(store, 1, Seq(s"$root/round=1/seen"))
-      store.commit(entry(store, 0, Seq.empty))
-      store.commit(e1)
-      store.commit(entry(store, 2, Seq(s"$root/round=2/seen")))
-      // a driver that crashed between durably committing round 1 and
-      // recording it locally retries AFTER a competitor advanced the
-      // store to round 2: the honest answer is "committed", not a
-      // conflict claiming the attempt wrote nothing (whose caller might
-      // sweep round 1's referenced files as orphans)
-      store.commit(e1)
-      assert(store.committedRounds() == Seq(0, 1, 2), s"$mode: history damaged")
-      // a DIFFERENT round-1 payload is still a genuine conflict
-      intercept[CommitConflictException] {
-        store.commit(entry(store, 1, Seq(s"$root/round=1/other")))
-      }
+    val root = freshDir("idempast")
+    val store = new SnapshotStore(root, confWith())
+    val e1 = entry(store, 1, Seq(s"$root/round=1/seen"))
+    store.commit(entry(store, 0, Seq.empty))
+    store.commit(e1)
+    store.commit(entry(store, 2, Seq(s"$root/round=2/seen")))
+    // a driver that crashed between durably committing round 1 and
+    // recording it locally retries AFTER a competitor advanced the
+    // store to round 2: the honest answer is "committed", not a
+    // conflict claiming the attempt wrote nothing (whose caller might
+    // sweep round 1's referenced files as orphans)
+    store.commit(e1)
+    assert(store.committedRounds() == Seq(0, 1, 2), "history damaged")
+    // a DIFFERENT round-1 payload is still a genuine conflict
+    intercept[CommitConflictException] {
+      store.commit(entry(store, 1, Seq(s"$root/round=1/other")))
     }
   }
 
   test("log mode: a wipe + fresh table whose round-0 entry collides on " +
       "(length, mtime) still invalidates other instances' caches — the " +
       "table marker, not the timestamp, carries the identity") {
-    val conf = confWith("graft.snapshot.commit.mode" -> "log")
+    val conf = confWith()
     val root = freshDir("wipemarker")
     val store = new SnapshotStore(root, conf)
     val reader = new SnapshotStore(root, conf) // long-lived dashboard
@@ -450,7 +346,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
       "log still resolves") {
     val root = freshDir("logdebris")
     val store = new SnapshotStore(root,
-      confWith("graft.snapshot.commit.mode" -> "log"))
+      confWith())
     val fs = store.fs
     def e(r: Int, logP: Option[String]) = store.entryJson(
       r, r - 1, Map("fetchlog" -> 3L), Seq(1L), Map.empty, Seq.empty,
@@ -475,25 +371,22 @@ class SnapshotStoreSpec extends AnyFunSuite {
 
   test("idempotent retry: re-committing the byte-identical winning entry " +
       "succeeds without duplicating it (both modes)") {
-    for (mode <- Seq("rename", "log")) {
-      val root = freshDir(s"idem-$mode")
-      val store = new SnapshotStore(root,
-        confWith("graft.snapshot.commit.mode" -> mode))
-      store.commit(entry(store, 0, Seq.empty))
-      val e1 = entry(store, 1, Seq(s"$root/round=1/seen"))
-      store.commit(e1)
-      store.commit(e1) // a driver retrying after an ambiguous failure
-      assert(store.committedRounds() == Seq(0, 1), s"$mode: duplicated")
-      // but a DIFFERENT round-1 payload is a genuine conflict
-      intercept[CommitConflictException] {
-        store.commit(entry(store, 1, Seq(s"$root/round=1/other")))
-      }
+    val root = freshDir("idem")
+    val store = new SnapshotStore(root, confWith())
+    store.commit(entry(store, 0, Seq.empty))
+    val e1 = entry(store, 1, Seq(s"$root/round=1/seen"))
+    store.commit(e1)
+    store.commit(e1) // a driver retrying after an ambiguous failure
+    assert(store.committedRounds() == Seq(0, 1), "duplicated")
+    // but a DIFFERENT round-1 payload is a genuine conflict
+    intercept[CommitConflictException] {
+      store.commit(entry(store, 1, Seq(s"$root/round=1/other")))
     }
   }
 
   test("log mode: a wipe + fresh table at the same root must not be read " +
       "through the dead table's entry cache (fixed names REPEAT)") {
-    val conf = confWith("graft.snapshot.commit.mode" -> "log")
+    val conf = confWith()
     val root = freshDir("wipecache")
     val store = new SnapshotStore(root, conf)
     val reader = new SnapshotStore(root, conf) // long-lived dashboard
@@ -511,8 +404,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
   test("log mode: immutable committed entries are GET once per store, not " +
       "once per read (the O(rounds²) object-store bill)") {
     val conf = confWith(
-      "fs.countfs.impl" -> classOf[CountingFileSystem].getName,
-      "graft.snapshot.commit.mode" -> "log")
+      "fs.countfs.impl" -> classOf[CountingFileSystem].getName)
     val root = "countfs://" + freshDir("logcache")
     val store = new SnapshotStore(root, conf)
     (0 to 4).foreach(r => store.commit(entry(store, r, Seq.empty)))
@@ -524,23 +416,5 @@ class SnapshotStoreSpec extends AnyFunSuite {
         s"(${CountingFileSystem.opens.get() - before} extra opens)")
     // a FRESH store instance (no cache) still reads everything correctly
     assert(new SnapshotStore(root, conf).committedRounds() == (0 to 4))
-  }
-
-  test("rename mode: a torn tmp on a never-committed store (writer died " +
-      "mid-tmp-write) reads as fresh, not as garbage") {
-    val root = freshDir("torntmp")
-    val store = new SnapshotStore(root, confWith())
-    val fs = store.fs
-    fs.mkdirs(new Path(root))
-    val out = fs.create(new Path(root, ".manifest.tmp"), true)
-    try out.write("""{"round": 0, "rows": {"fron""".getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // manifest never existed; tmp is a torn prefix — the longest
-    // parseable prefix is empty, so the store is (correctly) fresh
-    assert(store.committedRounds().isEmpty)
-    // and a real commit over the torn tmp succeeds and is visible
-    store.commit(entry(store, 0, Seq(s"$root/round=0/seen_delta")))
-    assert(store.committedRounds() == Seq(0))
   }
 }
