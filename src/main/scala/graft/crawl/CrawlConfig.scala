@@ -13,13 +13,10 @@ final case class CrawlConfig(
     * round still enter the seen set, like the reference's
     * seen-at-enqueue semantics]. */
   totalBudget: Long = Long.MaxValue,
-  /** Crawl delay for hosts without a robots crawl_delay_ms. */
-  defaultDelayMs: Long = 0L,
   /** Seen-set shard count P: bloom shards + pmod(url_hash, P) layout. */
   partitions: Int = 32,
   /** Expected insertions per bloom shard (sized for the tier). */
   bloomShardCapacity: Long = 200000L,
-  bloomFpp: Double = 0.01,
   /** Approximate-membership filter kind for the seen shards:
     * "bloom" (default) or "cuckoo" (deletion support, better space at
     * low FPP) — the north-star's "bloom/cuckoo" pair. Every round probes
@@ -35,10 +32,6 @@ final case class CrawlConfig(
     * live files accumulate (Iceberg-style compaction: keeps the per-round
     * scan O(1) instead of O(rounds), amortized O(log) rewrite). */
   seenCompactEvery: Int = 8,
-  /** Files per snapshot write (fetchlog/delta/frontier). Task-commit
-    * overhead dominates small-round writes at 32 files; at 10^10-URL
-    * scale set this to `partitions` so write parallelism matches. */
-  snapshotWriteFiles: Int = 8,
   /** Auto-expire superseded snapshot data files every this many rounds
     * (0 = never — expiry stays a manual [[SnapshotStore.expireRounds]]
     * call). Without expiry a 1000-round crawl keeps every superseded
@@ -94,4 +87,10 @@ final case class CrawlConfig(
   followMedia: Boolean = false) {
   require(seenFilter == "bloom" || seenFilter == "cuckoo",
     s"seenFilter must be \"bloom\" or \"cuckoo\", got \"$seenFilter\"")
+}
+
+object CrawlConfig {
+  /** Crawl delay for hosts without a robots crawl_delay_ms — shared by
+    * the engine and the sequential oracle so the two can never disagree. */
+  val DefaultDelayMs: Long = 0L
 }

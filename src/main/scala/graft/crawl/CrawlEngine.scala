@@ -60,7 +60,7 @@ final class CrawlEngine(
     "depth INT, round INT, rn INT, fetch_ts BIGINT, status STRING, doc_id STRING"
   private val tombSchema = "url_hash BIGINT, retire_round INT"
 
-  import CrawlEngine.SeenState
+  import CrawlEngine.{BloomFpp, SeenState, SnapshotWriteFiles}
 
   /** Frames persisted for the engine's lifetime — released by [[close]]
     * so a finished crawl leaves no cached data behind (the round-2 q09
@@ -170,24 +170,13 @@ final class CrawlEngine(
     * round with no fetch log; the crawl stays resumable. Returns the
     * number of retired URLs. */
   def retireHost(host: String): Long = {
-    // ONE manifest read for the whole operation: the former per-field
-    // liveX() accessors each re-read the manifest (each re-lists
-    // manifest.d and re-GET every entry object — ~5× the I/O on a
-    // 1000-round crawl), and two independent reads can straddle a
-    // concurrent commit and pair mismatched rounds' state
-    // (review finding). Everything below derives from this one entry.
-    val entry = store.readManifest().lastOption.getOrElse(
-      throw new IllegalStateException("no committed snapshot to retire from"))
-    // same fail-fast as loop()'s resume: bucketed seen files, pmod
-    // shards and lineage arrays are laid out by `partitions`, and this
-    // commit re-stamps the field — a mismatched retire would both corrupt
-    // the bucket-aligned anti-join AND overwrite the very field resume's
-    // own require() checks, masking the corruption (review finding)
-    val snapP = Option(entry.getOrElse("partitions", null))
-      .map(_.asInstanceOf[Number].intValue()).getOrElse(0)
-    require(snapP == 0 || snapP == cfg.partitions,
-      s"snapshot at $snapshotRoot was written with partitions=$snapP; " +
-        s"retireHost requires the same (config has ${cfg.partitions})")
+    // this commit re-stamps `partitions` — a mismatched retire would
+    // both corrupt the bucket-aligned anti-join AND overwrite the very
+    // field resume's own check reads, masking the corruption (review
+    // finding); both pointers resolve before anything is written
+    val entry = liveEntry("retire")
+    val frontierP = store.frontierPathOf(entry)
+    val hostReadyP = store.hostReadyPathOf(entry)
     val round = entry("round").asInstanceOf[Number].intValue()
     val next = round + 1
     val seenPaths = store.pathsOf(entry, "seen_paths")
@@ -201,17 +190,17 @@ final class CrawlEngine(
       .persist(StorageLevel.MEMORY_AND_DISK)
     val retiredCount = retired.count()
     val tombP = store.uniquePath(next, "tombstones")
-    retired.coalesce(cfg.snapshotWriteFiles)
+    retired.coalesce(SnapshotWriteFiles)
       .write.mode("overwrite").parquet(tombP)
     // count rides the write (single pass): re-reading the just-written
     // parquet purely for the manifest row count was a second full scan
     // of the frontier per takedown (review finding)
     val frontObs = new org.apache.spark.sql.Observation(s"retire-front-$next")
     val retFrontP = store.uniquePath(next, "frontier")
-    spark.read.schema(frontierSchema).parquet(store.frontierPathOf(entry))
+    spark.read.schema(frontierSchema).parquet(frontierP)
       .filter(col("host") =!= host)
       .observe(frontObs, count(lit(1)).as("n"))
-      .coalesce(cfg.snapshotWriteFiles)
+      .coalesce(SnapshotWriteFiles)
       .write.mode("overwrite").parquet(retFrontP)
     val frontierRows =
       Option(frontObs.get("n")).map(_.asInstanceOf[Number].longValue()).getOrElse(0L)
@@ -236,7 +225,7 @@ final class CrawlEngine(
       Map("fetched_total" -> fetchedTotal, "retired" -> retiredCount.toDouble),
       seenPaths, bloomPaths.toSeq, cfg.partitions,
       tombstonePaths = tombPaths :+ tombP,
-      hostReadyPath = Some(store.hostReadyPathOf(entry)),
+      hostReadyPath = Some(hostReadyP),
       frontierPath = Some(retFrontP)))
     retiredCount
   }
@@ -244,11 +233,8 @@ final class CrawlEngine(
   /** Full crawl order: the fetch log of all committed rounds, in global
     * (round, fetch_ts, host, url_hash) order == seq order. */
   def fetchLog(): DataFrame = {
-    // ONE shared resolution rule (SnapshotStore.fetchLogsOf): pointers
-    // trusted without existence probes, pre-pointer conventional
-    // fallbacks probed, and a conventional dir superseded by a
-    // unique-path rerun excluded as pre-upgrade crash debris — the same
-    // set history() exposes and expireRounds protects.
+    // every entry's fetchlog_path pointer (SnapshotStore.fetchLogsOf) —
+    // the same set history() exposes and expireRounds protects
     val paths = store.fetchLogsOf(store.readManifest()).flatten
     // schema-carrying empty frame, not spark.emptyDataFrame: callers
     // (spansEmitted, oracle comparisons) select fetch-log columns and
@@ -336,13 +322,13 @@ final class CrawlEngine(
     val (bloomPaths, lineage) =
       SeenSet.buildShards(spark,
         spark.read.schema(seenSchema).parquet(deltaP).select("url_hash"),
-        None, store.bloomsDir(0), cfg.partitions, cfg.bloomShardCapacity, cfg.bloomFpp,
+        None, store.bloomsDir(0), cfg.partitions, cfg.bloomShardCapacity, BloomFpp,
         cfg.seenFilter)
     // host-ready carries delay_ms (static per host) so the scheduler's
     // per-round hostMeta broadcast is a plain snapshot read — round 2
     // shuffle-joined delays ⟗ ready inside every round's broadcast future
     delaysDf.select(col("host"), lit(0L).as("ready_ts"), col("delay_ms"))
-      .coalesce(cfg.snapshotWriteFiles)
+      .coalesce(SnapshotWriteFiles)
       .write.mode("overwrite").parquet(hostReadyP)
     val nSeeds = lineage.sum
     store.commit(store.entryJson(0, -1,
@@ -360,36 +346,47 @@ final class CrawlEngine(
 
   // ---- the loop --------------------------------------------------------
 
+  /** The last committed manifest entry — ONE manifest read per resume or
+    * retire: two independent reads can straddle a concurrent commit and
+    * pair round N's seen files with round N+1's cleared tombstone list
+    * (review finding), so everything the caller needs derives from this
+    * one entry. Fails fast on a `partitions` mismatch: bucketed seen
+    * files, pmod shards and lineage arrays are all laid out by it, and a
+    * silent mismatch would corrupt the exact anti-join (review finding).
+    * `op` names the caller in the errors. */
+  private def liveEntry(op: String): Map[String, Any] = {
+    val entry = store.readManifest().lastOption.getOrElse(
+      throw new IllegalStateException(s"no committed snapshot to $op from"))
+    val snapP = Option(entry.getOrElse("partitions", null))
+      .map(_.asInstanceOf[Number].intValue()).getOrElse(0)
+    require(snapP == cfg.partitions,
+      s"snapshot at $snapshotRoot was written with partitions=$snapP; " +
+        s"$op requires the same (config has ${cfg.partitions})")
+    entry
+  }
+
   private def loop(maxRounds: Int): CrawlSummary = {
-    // ONE manifest read for the whole resume (same review class as
-    // retireHost's fix): the per-field liveX() accessors each re-read the
-    // manifest — re-listing manifest.d per call — and two
-    // independent reads can straddle a concurrent commit, pairing round
-    // N's seen files with round N+1's cleared tombstone list. Everything
-    // below derives from this one entry.
-    val resumeEntry = store.readManifest().lastOption.getOrElse(
-      throw new IllegalStateException("no committed snapshot to resume from"))
+    val resumeEntry = liveEntry("resume")
     var round = resumeEntry("round").asInstanceOf[Number].intValue()
-    // Fail fast on a pre-delay_ms-format snapshot: host-ready is the SOLE
-    // source of per-host delay since round 3 (hostMetaDf no longer joins
-    // delaysDf), and reading an old 2-column file through the 3-column
-    // schema would silently null every delay (→ defaultDelayMs politeness
-    // for all hosts) instead of erroring (review finding).
-    // hostReadyPathOf, not hostReadyPath(round): a retire round points
-    // back at its parent's file instead of copying O(#hosts) rows
-    val hostReadyLive = store.hostReadyPathOf(resumeEntry)
-    val hostReadyActual = spark.read.parquet(hostReadyLive).schema
-    require(hostReadyActual.fieldNames.contains("delay_ms"),
-      s"host-ready snapshot at $hostReadyLive predates the " +
-        "delay_ms-carrying format; re-run the crawl from scratch (runFresh)")
-    var hostReadyDf = spark.read.schema(hostReadySchema).parquet(hostReadyLive)
+    // the round's frontier file is a unique path carried by the manifest
+    // (split-brain safety) — threaded through the loop: each round's sink
+    // picks a fresh unique path and the next round reads it. Host-ready
+    // likewise (a retire round points back at its parent's file instead
+    // of copying O(#hosts) rows). Both resolve before any side effect.
+    var frontierPathCur = store.frontierPathOf(resumeEntry)
+    var hostReadyDf =
+      spark.read.schema(hostReadySchema).parquet(store.hostReadyPathOf(resumeEntry))
     val seenPaths0: Seq[String] = store.pathsOf(resumeEntry, "seen_paths")
     // The compacted seen base lives as a BUCKETED (by url_hash, sorted)
     // external table: the exact anti-join's big side then scans
     // bucket-aligned with NO exchange and NO sort every round — the
     // cross-round shuffle reuse SURVEY §4 promises. Deltas since the
     // last compaction stay plain parquet (small → broadcast anti-joins).
-    def isBasePath(p: String): Boolean = p.contains("/seen_base")
+    // Classified by the file's own name (uniquePath's `seen_base-<id>`),
+    // never by a substring of the whole path: a snapshot root whose path
+    // contains "/seen_base" would otherwise match every seen file.
+    def isBasePath(p: String): Boolean =
+      new org.apache.hadoop.fs.Path(p).getName.startsWith("seen_base")
     val basePath0: Option[String] = seenPaths0.find(isBasePath)
     // Re-register the base table from the MANIFEST's path unconditionally
     // (review finding): a crash between compaction's DROP+saveAsTable and
@@ -404,24 +401,11 @@ final class CrawlEngine(
         s"SORTED BY (url_hash) INTO ${cfg.partitions} BUCKETS " +
         s"LOCATION '${store.qualified(bp)}'")
     }
-    // fail fast on config/snapshot mismatches: bucketed files, pmod
-    // shards and lineage arrays are all laid out by `partitions`, and a
-    // silent mismatch would corrupt the exact anti-join (review finding)
-    val snapP = Option(resumeEntry.getOrElse("partitions", null))
-      .map(_.asInstanceOf[Number].intValue()).getOrElse(0)
-    require(snapP == 0 || snapP == cfg.partitions,
-      s"snapshot at $snapshotRoot was written with partitions=$snapP; " +
-        s"resume requires the same (config has ${cfg.partitions})")
     val bloomPaths0 = store.pathsOf(resumeEntry, "bloom_paths").toArray
     require(bloomPaths0.length == cfg.partitions,
       s"snapshot has ${bloomPaths0.length} seen-filter shards but config expects " +
         s"${cfg.partitions} (snapshot written without shards, or partitions changed)")
     val bloomReader0 = new BloomShardReader(bloomPaths0, store.confSer)
-    // the round's frontier file is a unique path carried by the manifest
-    // (split-brain safety; pre-pointer manifests fall back to the
-    // conventional round=R/frontier) — threaded through the loop: each
-    // round's sink picks a fresh unique path and the next round reads it
-    var frontierPathCur = store.frontierPathOf(resumeEntry)
     var fetchedSoFar = resumeEntry("metrics")
       .asInstanceOf[java.util.Map[String, Any]]
       .get("fetched_total").asInstanceOf[Number].longValue()
@@ -536,7 +520,7 @@ final class CrawlEngine(
       // round's single materialization (same pattern as candCount).
       // In web-scale mode (robotsViaJoin) hostMeta is O(#hosts), so the
       // scheduler joins it distributed instead of broadcasting it.
-      val schedAll = Scheduler.salted(allowed, hostMeta, cfg.defaultDelayMs,
+      val schedAll = Scheduler.salted(allowed, hostMeta, CrawlConfig.DefaultDelayMs,
           broadcastMeta = !cfg.robotsViaJoin, usePrio = cfg.priorityByUrlLen)
         .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -665,7 +649,7 @@ final class CrawlEngine(
         // subsequent query (review finding)
         try logFrame.select("seq", "url_canon", "url_hash", "host", "depth", "round",
             "rn", "fetch_ts", "status", "doc_id")
-          .coalesce(cfg.snapshotWriteFiles)
+          .coalesce(SnapshotWriteFiles)
           .write.mode("overwrite").parquet(fetchLogP)
         finally seqCleanup()
       }
@@ -681,16 +665,16 @@ final class CrawlEngine(
         val perHostAdd = fetched.groupBy("host").agg(count(lit(1)).as("cnt"))
           .join(broadcast(delaysDf), Seq("host"), "left")
           .select(col("host"),
-            (col("cnt") * coalesce(col("delay_ms"), lit(cfg.defaultDelayMs))).as("v"),
+            (col("cnt") * coalesce(col("delay_ms"), lit(CrawlConfig.DefaultDelayMs))).as("v"),
             col("delay_ms"))
-        // snapshotWriteFiles-way, not coalesce(1): host-ready is O(#hosts)
+        // SnapshotWriteFiles-way, not coalesce(1): host-ready is O(#hosts)
         // rows — one task would be a GB-scale single-task write at the
         // 10^7–10^8-host scale (review finding)
         hostReadyDf.select(col("host"), col("ready_ts").as("v"), col("delay_ms"))
           .unionByName(perHostAdd)
           .groupBy("host").agg(sum(col("v")).as("ready_ts"),
             max(col("delay_ms")).as("delay_ms"))
-          .coalesce(cfg.snapshotWriteFiles)
+          .coalesce(SnapshotWriteFiles)
           .write.mode("overwrite").parquet(hostReadyP)
       }(scala.concurrent.ExecutionContext.global)
 
@@ -792,7 +776,7 @@ final class CrawlEngine(
       val frontierP = store.uniquePath(next, "frontier")
       val frontierFut = Future {
         carried.unionByName(newUrls.select("url_canon", "url_hash", "host", "depth"))
-          .coalesce(cfg.snapshotWriteFiles)
+          .coalesce(SnapshotWriteFiles)
           .write.mode("overwrite").parquet(frontierP)
       }
       // host-ready feeds the NEXT round's scheduler definition on the
@@ -833,7 +817,7 @@ final class CrawlEngine(
         // the hot newUrls cache
         val (bloomPaths, lineage) =
           SeenSet.buildShards(spark, newUrls.select("url_hash"), Some(st.bloomReader),
-            store.bloomsDir(next), cfg.partitions, cfg.bloomShardCapacity, cfg.bloomFpp,
+            store.bloomsDir(next), cfg.partitions, cfg.bloomShardCapacity, BloomFpp,
             cfg.seenFilter)
         val nextReader = new BloomShardReader(bloomPaths, store.confSer)
         // join the frontier sink BEFORE compaction: writeSeenBase runs
@@ -915,6 +899,14 @@ final class CrawlEngine(
 }
 
 object CrawlEngine {
+
+  /** Files per snapshot write (fetch log, frontier, host-ready,
+    * tombstones): task-commit overhead dominates small-round writes at
+    * one file per partition. */
+  private val SnapshotWriteFiles = 8
+
+  /** Target false-positive rate of every seen-filter shard. */
+  private val BloomFpp = 0.01
 
   /** Live seen-set state produced by one round's pipelined tail and
     * consumed by the next round's probe definition (threaded through the

@@ -25,9 +25,10 @@ import scala.jdk.CollectionConverters._
   *    live per-bucket seen counts at every round).
   *  - `metrics` — the engine's per-round metrics map (fetched_total, ...).
   *  - path columns — the files the round references (seen/bloom/tombstone
-  *    lists, host-ready / frontier / fetch-log pointers, resolved through
-  *    the same fallbacks resume uses; `fetchlog_path` is null for rounds
-  *    that committed no fetch log, e.g. round 0).
+  *    lists, and the entry's raw host-ready / frontier / fetch-log
+  *    pointers, null where the entry has none: `fetchlog_path` for rounds
+  *    that committed no fetch log, e.g. round 0, and every pointer for
+  *    entries committed without them).
   */
 object SnapshotHistory {
 
@@ -47,9 +48,7 @@ object SnapshotHistory {
   ))
 
   def apply(spark: SparkSession, store: SnapshotStore): DataFrame = {
-    val entries = store.readManifest()
-    val fetchLogs = store.fetchLogsOf(entries)
-    val rows: Seq[Row] = entries.zip(fetchLogs).map { case (e, fetchLogP) =>
+    val rows: Seq[Row] = store.readManifest().map { e =>
       val rowCounts = Option(e.getOrElse("rows", null))
         .map(_.asInstanceOf[java.util.Map[String, Any]].asScala.toMap
           .map { case (k, v) => k -> v.asInstanceOf[Number].longValue() })
@@ -72,9 +71,9 @@ object SnapshotHistory {
         store.pathsOf(e, "seen_paths"),
         store.pathsOf(e, "bloom_paths"),
         store.pathsOf(e, "tombstone_paths"),
-        store.hostReadyPathOf(e),
-        store.frontierPathOf(e),
-        fetchLogP.orNull
+        store.pointer(e, "hostready_path").orNull,
+        store.pointer(e, "frontier_path").orNull,
+        store.pointer(e, "fetchlog_path").orNull
       )
     }
     spark.createDataFrame(rows.asJava, schema)

@@ -79,9 +79,14 @@ final class HadoopConfSer(@transient private var conf: Configuration) extends Se
   * invisible orphans, never overwrites of files a winning commit
   * references.
   *
-  * Layout under `root` (data dirs are the unique-path forms since the
-  * split-brain work, e.g. `frontier-3fa9c1b2/`; the fixed names remain
-  * as read fallbacks for older manifests):
+  * Layout under `root`. Every data dir is a unique-path form
+  * ([[uniquePath]], e.g. `frontier-3fa9c1b2/`) that the manifest entry
+  * points at; readers find a round's frontier, host-ready state and fetch
+  * log ONLY through the entry's `frontier_path` / `hostready_path` /
+  * `fetchlog_path` pointers. A store whose entries predate those pointers
+  * (rounds ≤ 3 of this engine wrote fixed per-round names instead) fails
+  * loudly at resume, retire and expiry instead of being read through
+  * guessed paths:
   * {{{
   *   manifest.d/r<R>.json    one immutable JSON object per committed round
   *                           (R zero-padded to 9 digits; exclusive-created,
@@ -93,6 +98,10 @@ final class HadoopConfSer(@transient private var conf: Configuration) extends Se
   *   round=R/seen_delta-u/   parquet — url hashes first seen in round R-1's
   *                           expansion (round 0 delta = the seed list);
   *                           listed in seen_paths
+  *   round=R/seen_base-u/    bucketed parquet — the compacted seen set
+  *                           (listed in seen_paths)
+  *   round=R/tombstones-u/   parquet — a retire round's masked url hashes
+  *                           (listed in tombstone_paths)
   *   round=R/fetchlog-u/     parquet — fetches performed in round R
   *                           (pointed at by entry R+1's fetchlog_path)
   *   round=R/blooms/         one immutable uuid-named file per bloom shard
@@ -143,13 +152,7 @@ final class SnapshotStore(rootSpec: String,
 
   def manifestLogDir: Path = new Path(root, "manifest.d")
   def roundDir(r: Int): String = s"$root/round=$r"
-  def frontierPath(r: Int): String = s"${roundDir(r)}/frontier"
-  def seenDeltaPath(r: Int): String = s"${roundDir(r)}/seen_delta"
-  def seenBasePath(r: Int): String = s"${roundDir(r)}/seen_base"
-  def fetchLogPath(r: Int): String = s"${roundDir(r)}/fetchlog"
   def bloomsDir(r: Int): String = s"${roundDir(r)}/blooms"
-  def hostReadyPath(r: Int): String = s"${roundDir(r)}/hostready"
-  def tombstonesPath(r: Int): String = s"${roundDir(r)}/tombstones"
 
   /** A fresh, never-before-used data dir for `kind` under round `r` —
     * Iceberg's unique-data-file-path design: every committed artifact
@@ -158,11 +161,12 @@ final class SnapshotStore(rootSpec: String,
     * ([[CommitConflictException]]) cannot have overwritten any file a
     * winning commit references (`mode("overwrite")` on a shared
     * conventional path deletes the dir first — a loser racing the winner
-    * would delete committed data mid-read). The fixed-name forms above
-    * remain as the read fallback for pre-round-4 manifests. `kind` is the
-    * conventional name ([[expireRounds]] classifies children by name
-    * prefix: `fetchlog*` is crawl output and never expires, `blooms*`
-    * sweeps per-file, everything else expires by manifest reference). */
+    * would delete committed data mid-read). The manifest entry carries
+    * the path, and it is the only way readers find the dir. `kind` is the
+    * name prefix ([[expireRounds]] classifies children by it: `fetchlog*`
+    * is crawl output and never expires, `blooms*` sweeps per-file,
+    * everything else expires by manifest reference; the engine tells the
+    * compacted `seen_base*` from the deltas by it). */
   def uniquePath(r: Int, kind: String): String =
     s"${roundDir(r)}/$kind-${java.util.UUID.randomUUID().toString.take(8)}"
 
@@ -584,105 +588,50 @@ final class SnapshotStore(rootSpec: String,
     (manifest.lastOption.map(metricOf(_, "fetched_total")).getOrElse(0.0),
       manifest.map(metricOf(_, "candidates")).sum)
 
-  /** String-list field of a manifest entry, empty when absent (tolerates
-    * pre-round-2 manifests missing the field so the engine's own
-    * require() diagnostics stay reachable instead of a bare
-    * NoSuchElementException; review finding). May contain nulls —
-    * bloom_paths commits null entries for never-written shards. The
-    * entry-taking accessors exist so a caller can resolve EVERYTHING off
-    * ONE readManifest() snapshot: two independent liveX() calls can
-    * straddle a concurrent commit and pair round N's seen files with
-    * round N+1's cleared tombstone list (review finding). */
+  /** String-list field of a manifest entry, empty when absent (optional
+    * fields such as tombstone_paths are written only when non-empty). May
+    * contain nulls — bloom_paths commits null entries for never-written
+    * shards. The accessors take an entry so a caller resolves EVERYTHING
+    * off ONE readManifest() snapshot: two independent reads can straddle
+    * a concurrent commit and pair round N's seen files with round N+1's
+    * cleared tombstone list (review finding). */
   def pathsOf(entry: Map[String, Any], key: String): Seq[String] =
     Option(entry.getOrElse(key, null))
       .map(_.asInstanceOf[java.util.List[String]].asScala.toSeq)
       .getOrElse(Seq.empty)
 
-  /** The host-ready snapshot path a manifest entry points at: its
-    * explicit pointer if present, else its round's conventional path
-    * (pre-pointer manifests, and every crawl round — only retire rounds
-    * point back at their parent's file). */
-  def hostReadyPathOf(entry: Map[String, Any]): String =
-    Option(entry.getOrElse("hostready_path", null))
-      .map(_.asInstanceOf[String])
-      .getOrElse(hostReadyPath(entry("round").asInstanceOf[Number].intValue()))
+  /** A single-path pointer field of a manifest entry (`frontier_path`,
+    * `hostready_path`, `fetchlog_path`), `None` when the entry has none. */
+  def pointer(entry: Map[String, Any], key: String): Option[String] =
+    Option(entry.getOrElse(key, null)).map(_.asInstanceOf[String])
 
-  /** The frontier a manifest entry's round starts from: its explicit
-    * pointer (unique-path commits, round 4+) or the round's conventional
-    * path (pre-pointer manifests). */
-  def frontierPathOf(entry: Map[String, Any]): String =
-    Option(entry.getOrElse("frontier_path", null))
-      .map(_.asInstanceOf[String])
-      .getOrElse(frontierPath(entry("round").asInstanceOf[Number].intValue()))
-
-  /** The fetch log a manifest entry committed, if any: the entry for
-    * round R+1 carries the log of round R's fetches (an explicit pointer
-    * on unique-path commits; pre-pointer manifests wrote it at round R's
-    * conventional path — which is why the fallback keys on the ENTRY's
-    * round: the old reader scanned every committed round r for an
-    * existing `round=r/fetchlog`, and entry r is always committed before
-    * round r's step runs). Callers filter by existence — entry 0 and
-    * retire rounds commit no log. */
-  def fetchLogPathOf(entry: Map[String, Any]): String =
-    Option(entry.getOrElse("fetchlog_path", null))
-      .map(_.asInstanceOf[String])
-      .getOrElse(fetchLogPath(entry("round").asInstanceOf[Number].intValue()))
-
-  /** The fetch log each manifest entry committed, resolved off ONE
-    * manifest snapshot — THE resolution rule, shared by
-    * [[graft.crawl.CrawlEngine.fetchLog]], [[SnapshotHistory]] and
-    * [[expireRounds]] so they can never disagree about which logs exist
-    * (review finding: three inlined copies). Per entry:
-    *
-    *  - a `fetchlog_path` pointer is trusted without an existence probe
-    *    (the sink is joined before the commit, so a pointer's log is
-    *    always durable; probing cost O(rounds) object-store HEADs);
-    *  - a pre-pointer entry falls back to its round's conventional
-    *    `round=r/fetchlog` dir, existence-probed (entry 0 and retire
-    *    rounds commit no log) — UNLESS some entry's pointer references a
-    *    unique-path log under the SAME round dir: then the round was
-    *    re-run under the unique-path data plane after a pre-upgrade
-    *    crash, the conventional dir is the crashed attempt's
-    *    never-overwritten debris, and reading it would double-count the
-    *    round's fetches (review finding — the old engine self-healed by
-    *    mode("overwrite") on the shared conventional path; unique paths
-    *    deliberately don't). */
-  def fetchLogsOf(entries: Seq[Map[String, Any]]): Seq[Option[String]] = {
-    val pointerRoundDirs: Set[String] = entries.flatMap { e =>
-      Option(e.getOrElse("fetchlog_path", null)).map(_.asInstanceOf[String])
-        .map(p => new Path(p).getParent.toString)
-    }.toSet
-    entries.map { e =>
-      Option(e.getOrElse("fetchlog_path", null)).map(_.asInstanceOf[String])
-        .orElse {
-          val conv = fetchLogPath(e("round").asInstanceOf[Number].intValue())
-          Some(conv).filter(c =>
-            !pointerRoundDirs.contains(new Path(c).getParent.toString) &&
-              exists(c))
-        }
+  /** A pointer every entry this engine commits carries: an entry without
+    * it predates the pointer-carrying format, and guessing a conventional
+    * path for it would read whatever happens to sit there. */
+  private def requiredPointer(entry: Map[String, Any], key: String): String =
+    pointer(entry, key).getOrElse {
+      throw new IllegalStateException(
+        s"manifest entry for round ${entry("round")} under $root has no " +
+          s"$key: the store predates the pointer-carrying snapshot format " +
+          "and cannot be read by this version")
     }
-  }
 
-  /** Live seen-set parquet paths as of the last committed round. */
-  def liveSeenPaths(): Seq[String] =
-    readManifest().lastOption.map(pathsOf(_, "seen_paths")).getOrElse(Seq.empty)
+  /** The host-ready snapshot a manifest entry points at (a retire round
+    * points back at its parent's file). */
+  def hostReadyPathOf(entry: Map[String, Any]): String =
+    requiredPointer(entry, "hostready_path")
 
-  /** Live retire-tombstone parquet paths (url_hash, retire_round) as of
-    * the last committed round — empty when no un-compacted retire exists
-    * (the common case; pre-tombstone manifests simply lack the field). */
-  def liveTombstonePaths(): Seq[String] =
-    readManifest().lastOption.map(pathsOf(_, "tombstone_paths")).getOrElse(Seq.empty)
+  /** The frontier a manifest entry's round starts from. */
+  def frontierPathOf(entry: Map[String, Any]): String =
+    requiredPointer(entry, "frontier_path")
 
-  /** The live host-ready snapshot path — [[hostReadyPathOf]] of the last
-    * committed entry (round 0's conventional path on a fresh store). */
-  def liveHostReadyPath(): String =
-    readManifest().lastOption.map(hostReadyPathOf).getOrElse(hostReadyPath(0))
-
-  /** Per-shard bloom file paths as of the last committed round (null
-    * entries = never-written shards); empty when blooms are disabled. */
-  def liveBloomPaths(): Array[String] =
-    readManifest().lastOption.map(pathsOf(_, "bloom_paths").toArray)
-      .getOrElse(Array.empty[String])
+  /** The fetch log each manifest entry committed: its `fetchlog_path`,
+    * else `None` (round 0 and retire rounds commit no log) — the set
+    * [[graft.crawl.CrawlEngine.fetchLog]] reads and [[expireRounds]]
+    * protects. A pointer is trusted without an existence probe: the sink
+    * is joined before the commit. */
+  def fetchLogsOf(entries: Seq[Map[String, Any]]): Seq[Option[String]] =
+    entries.map(pointer(_, "fetchlog_path"))
 
   /** The committed manifest entry for `round`, if any — the time-travel
     * lookup [[graft.crawl.CrawlEngine.seenAsOf]] and [[expireRounds]]'
@@ -711,7 +660,7 @@ final class SnapshotStore(rootSpec: String,
     * expiry a 1000-round crawl keeps every superseded version forever.
     *
     * Keeps, and never touches:
-    *  - every round's `fetchlog/` — the crawl's OUTPUT (the span/order
+    *  - every round's `fetchlog-*` dir — the crawl's OUTPUT (the span/order
     *    invariant BASELINE.json:15 is computed from the full log; a
     *    deployment archives or ETLs these independently of crawl state);
     *  - every file referenced by the last `keepLast` committed rounds
@@ -722,8 +671,8 @@ final class SnapshotStore(rootSpec: String,
     *    matching Iceberg's expire-snapshots contract.
     *
     * Deletes, for every committed round older than the keep window: the
-    * `frontier/`, `seen_delta/`, `seen_base/`, `hostready/` and
-    * `tombstones/` dirs not referenced by a kept round, and individual
+    * `frontier-*`, `seen_delta-*`, `seen_base-*`, `hostready-*` and
+    * `tombstones-*` dirs not referenced by a kept round, and individual
     * unreferenced bloom shard files (a kept round's bloom_paths may point
     * INTO an old round's blooms dir — those files survive, the rest of
     * the dir goes). Rounds outside the keep window are no longer
@@ -736,26 +685,28 @@ final class SnapshotStore(rootSpec: String,
     * and fetchlog dirs of expired rounds that NO manifest entry
     * references (a split-brain loser writes its fetch log before its
     * commit conflicts — debris, not output; every committed round's log
-    * is protected by its entry's fetchlog_path, conventional fallbacks
-    * included). Off by default: an orphan dir above the last committed
+    * is protected by its entry's fetchlog_path). Off by default: an orphan dir above the last committed
     * round may be a CONCURRENT crawl's in-flight round; only enable on a
     * quiesced snapshot root.
+    *
+    * Every committed entry must carry its frontier and host-ready
+    * pointers: a pre-pointer store's logs sit at conventional paths no
+    * entry references, so the orphan sweep would delete its output. Such
+    * a store fails before anything is deleted.
     *
     * Returns the number of deleted paths (dirs count as one). */
   def expireRounds(keepLast: Int = 1, removeOrphans: Boolean = false): Long = {
     require(keepLast >= 1, s"keepLast=$keepLast — must keep at least the live round")
     val manifest = readManifest()
     if (manifest.isEmpty) return 0L
+    manifest.foreach { e => frontierPathOf(e); hostReadyPathOf(e) }
     def roundOf(e: Map[String, Any]): Int = e("round").asInstanceOf[Number].intValue()
     val kept = manifest.takeRight(keepLast)
     val minKept = roundOf(kept.head)
     val committed = manifest.map(roundOf).toSet
     val refs: Set[String] = kept.flatMap(referencedPaths).toSet
     // every committed round's fetch log (ANY round, not just kept ones —
-    // the crawl's output is never expired). fetchLogsOf's debris rule
-    // applies: a conventional dir superseded by a unique-path rerun is
-    // NOT protected (it is a crashed pre-upgrade attempt's debris,
-    // sweepable under removeOrphans like any other lost attempt's log).
+    // the crawl's output is never expired)
     val logRefs: Set[String] =
       fetchLogsOf(manifest).flatten.map(qualified).toSet
     var deleted = 0L
@@ -770,10 +721,8 @@ final class SnapshotStore(rootSpec: String,
       if (r >= 0 && !committed.contains(r)) {
         if (removeOrphans) drop(rd)
       } else if (r >= 0 && r < minKept) {
-        // children are classified by name prefix: conventional names
-        // ("frontier", "seen_delta", ...) and their unique-path forms
-        // ("frontier-3fa9c1b2", ...) share prefixes by construction
-        // (uniquePath's contract). fetchlog* is the crawl's OUTPUT and
+        // children are classified by name prefix (uniquePath's
+        // contract: "frontier-3fa9c1b2" starts with its kind). fetchlog* is the crawl's OUTPUT and
         // never expires; blooms* sweeps per-file because a kept round's
         // bloom_paths may point INTO an old round's dir.
         for (child <- fs.listStatus(rd).toSeq.map(_.getPath)) {

@@ -86,7 +86,7 @@ final class CrawlOracle(corpus: CorpusGen.Corpus, cfg: CrawlConfig) {
           if (cfg.priorityByUrlLen) es.sortBy(e => (prioOf(e.urlCanon), e.depth, e.urlHash))
           else es.sortBy(e => (e.depth, e.urlHash))
         val ready = hostReady.getOrElse(host, 0L)
-        val delay = delayByHost.getOrElse(host, cfg.defaultDelayMs)
+        val delay = delayByHost.getOrElse(host, CrawlConfig.DefaultDelayMs)
         sorted.zipWithIndex.foreach { case (e, i) =>
           val rn = i + 1
           if (rn <= cfg.perHostPerRound) scheduled += ((e, rn, ready + i.toLong * delay))
@@ -145,7 +145,7 @@ final class CrawlOracle(corpus: CorpusGen.Corpus, cfg: CrawlConfig) {
       }
       // host-ready advance by kept count
       kept.groupBy(_._1.host).foreach { case (host, ks) =>
-        val delay = delayByHost.getOrElse(host, cfg.defaultDelayMs)
+        val delay = delayByHost.getOrElse(host, CrawlConfig.DefaultDelayMs)
         hostReady(host) = hostReady.getOrElse(host, 0L) + ks.size.toLong * delay
       }
       fetchedSoFar += kept.size

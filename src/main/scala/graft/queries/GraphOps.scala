@@ -469,15 +469,13 @@ object GraphOps {
       try {
       var e = truncate(und0.filter(col("a") > col("b"))
         .select(col("a").as("u"), col("b").as("v")).distinct())
-      var eCnt = e.count()
+      val eCnt = e.count()
       und0.unpersist(false)
       var it = 0
       // a graph of only self-loops has no work: every host is its own
       // star center
       var stars = eCnt == 0L
-      val trace = sys.env.contains("GRAFT_TRACE")
       while (!stars) {
-        val tIt = System.nanoTime()
         it += 1
         if (it > maxIters) throw new IllegalStateException(
           s"hostComponents: no star fixpoint after $maxIters rounds; raise maxIters")
@@ -514,27 +512,19 @@ object GraphOps {
         //      [round-5 review fix].
         // Per node: nu = rows as satellite, nr = all rows; violation
         // iff nu > 1 (class 2) or nu >= 1 and nr > nu (also a center —
-        // class 1). Σnu = |e2| gives the edge count in the same pass.
-        // Star graphs are fixpoints of both phases, so stopping at
+        // class 1). Star graphs are fixpoints of both phases, so stopping at
         // zero violations is stopping at the true fixpoint.
         val chk = e2.select(col("u").as("n"), lit(1L).as("su"))
           .union(e2.select(col("v").as("n"), lit(0L).as("su")))
           .groupBy("n")
           .agg(sum(col("su")).as("nu"), count(lit(1)).as("nr"))
-          .agg(coalesce(sum(col("nu")), lit(0L)).as("edges"),
-            coalesce(sum(when(col("nu") > 1 or
+          .agg(coalesce(sum(when(col("nu") > 1 or
                 (col("nu") >= 1 and col("nr") > col("nu")), 1L)
               .otherwise(0L)), lit(0L)).as("bad"))
           .head()
-        val c2 = chk.getLong(0)
-        val nonStar = chk.getLong(1)
-        stars = nonStar == 0L
+        stars = chk.getLong(0) == 0L
         e = e2
-        eCnt = c2
         loop.retireRound()
-        if (trace) System.err.println(
-          f"[components] round $it%d edges $c2%d nonstar $nonStar%d " +
-            f"${(System.nanoTime() - tIt) / 1e9}%.2f s")
       }
       // star forest -> labels: satellites take their center, centers and
       // isolated hosts label themselves

@@ -26,6 +26,10 @@ class CrawlEngineSpec extends SparkTestBase {
       .as[(Long, String, Int)].collect()
       .map(t => t._1 -> ((t._2, t._3))).toMap
 
+  /** A path-list field of the last committed manifest entry. */
+  private def live(e: CrawlEngine, key: String): Seq[String] =
+    e.store.pathsOf(e.store.readManifest().last, key)
+
   lazy val oracleResult = new CrawlOracle(corpus, cfg).run()
   lazy val engine: CrawlEngine = {
     val e = new CrawlEngine(spark, fixtureDir, snapDir("main"), cfg)
@@ -87,6 +91,26 @@ class CrawlEngineSpec extends SparkTestBase {
     assert(collectSeen(e2) == collectSeen(engine))
   }
 
+  test("a snapshot root whose path contains /seen_base crawls and resumes " +
+      "exactly like the sequential oracle") {
+    // the compacted base is told from the deltas by its file name; a
+    // whole-path substring match would take every seen file under such a
+    // root for the base
+    val want = oracleResult.log.map(f =>
+      (f.seq, f.urlCanon, f.urlHash, f.host, f.depth, f.round, f.rn, f.fetchTs, f.status, f.docId))
+    val fresh = new CrawlEngine(spark, fixtureDir, snapDir("seen_base-root/fresh"), cfg)
+    fresh.runFresh()
+    assert(fresh.store.root.contains("/seen_base"), fresh.store.root)
+    assert(collectLog(fresh) == want)
+    assert(collectSeen(fresh) == oracleResult.seen)
+    val dir = snapDir("seen_base-root/resume")
+    new CrawlEngine(spark, fixtureDir, dir, cfg).runFresh(maxRounds = 2)
+    val resumed = new CrawlEngine(spark, fixtureDir, dir, cfg)
+    resumed.resume()
+    assert(collectLog(resumed) == want)
+    assert(collectSeen(resumed) == oracleResult.seen)
+  }
+
   test("torn partial round writes are invisible: resume equals the uninterrupted crawl") {
     // The snapshot invariant ("partially-written rounds are invisible",
     // SURVEY §8a.3/§8b.6): a crash can happen AFTER any subset of round
@@ -96,10 +120,10 @@ class CrawlEngineSpec extends SparkTestBase {
     // torn dir per sink kind, in the next round's dir AND a lost
     // attempt's sibling in the last COMMITTED round's dir), a stray
     // shard blob in the shared blooms dir, an orphan un-committed
-    // seen_base, plus the legacy conventional names (pre-pointer
-    // fallback paths) — and assert a fresh engine resumes to the exact
-    // uninterrupted crawl: resume reads ONLY manifest-referenced paths,
-    // so none of the debris is ever opened.
+    // seen_base, plus the fixed per-round names that stores written
+    // before the pointer-carrying format used — and assert a fresh engine
+    // resumes to the exact uninterrupted crawl: resume reads ONLY
+    // manifest-referenced paths, so none of the debris is ever opened.
     // The debris goes through the store's own Hadoop FileSystem: the
     // store's paths are qualified URIs (file:/...), which java.nio would
     // treat as relative names and write somewhere resume never looks.
@@ -124,13 +148,10 @@ class CrawlEngineSpec extends SparkTestBase {
       // a split-brain loser's torn sibling inside a COMMITTED round's dir
       splat(s"${e1.store.roundDir(last)}/fetchlog-deadbeef",
         "part-00000.snappy.parquet")
-      // legacy conventional names (pre-pointer manifests' fallback paths)
-      splat(e1.store.frontierPath(next), "part-00000.snappy.parquet")
-      splat(e1.store.fetchLogPath(next), "part-00000.snappy.parquet")
-      splat(e1.store.seenDeltaPath(next), "part-00000.snappy.parquet")
-      splat(e1.store.hostReadyPath(next), "part-00000.snappy.parquet")
+      // the fixed per-round names of pre-pointer stores
+      for (kind <- Seq("frontier", "fetchlog", "seen_delta", "hostready", "seen_base"))
+        splat(s"${e1.store.roundDir(next)}/$kind", "part-00000.snappy.parquet")
       splat(e1.store.bloomsDir(next), "shard-0.dead-uuid.bin")
-      splat(e1.store.seenBasePath(next), "part-00000.snappy.parquet")
       debris.foreach(d => assert(e1.store.exists(d), s"debris not where the store resolves: $d"))
       val e2 = new CrawlEngine(spark, fixtureDir, dir, cfg)
       e2.resume()
@@ -182,7 +203,7 @@ class CrawlEngineSpec extends SparkTestBase {
 
   test("resume re-registers the bucketed seen base after catalog loss (fresh-session path)") {
     engine // ensure the main crawl ran
-    val basePaths = engine.store.liveSeenPaths().filter(_.contains("/seen_base"))
+    val basePaths = live(engine, "seen_paths").filter(_.contains("/seen_base"))
     assert(basePaths.nonEmpty, "main crawl should have compacted at least once")
     val tableName = s"graft_seen_${java.lang.Integer.toHexString(snapDir("main").hashCode)}"
     // simulate a new session: the in-memory catalog forgot the table
@@ -203,7 +224,7 @@ class CrawlEngineSpec extends SparkTestBase {
     val scfg = cfg.copy(seenCompactEvery = 2)
     val e1 = new CrawlEngine(spark, fixtureDir, root, scfg)
     e1.runFresh(maxRounds = 3)
-    val basePaths = e1.store.liveSeenPaths().filter(_.contains("/seen_base"))
+    val basePaths = live(e1, "seen_paths").filter(_.contains("/seen_base"))
     assert(basePaths.nonEmpty, "test needs a committed compaction mid-crawl")
     // simulate a crash between a LATER compaction's DROP+saveAsTable and
     // store.commit: the catalog table now points at an uncommitted base
@@ -270,7 +291,7 @@ class CrawlEngineSpec extends SparkTestBase {
     // shards: still no false negatives for kept keys; retired keys mostly
     // probe negative (cuckoo deletes really happened — a few aliased
     // fingerprints may remain maybe-positive)
-    val reader = new BloomShardReader(e.store.liveBloomPaths(), e.store.confSer)
+    val reader = new BloomShardReader(live(e, "bloom_paths").toArray, e.store.confSer)
     after.keys.foreach(h => assert(reader.mightContain(h), "false negative after retire"))
     val still = expectRetired.keys.count(reader.mightContain)
     assert(still <= math.max(1, expectRetired.size / 10),
@@ -286,8 +307,9 @@ class CrawlEngineSpec extends SparkTestBase {
     val e = new CrawlEngine(spark, fixtureDir, snapDir("retire-bloom"), cfg)
     e.runFresh()
     val before = collectSeen(e)
-    val seenPathsBefore = e.store.liveSeenPaths()
-    val bloomPathsBefore = e.store.liveBloomPaths().toSeq
+    val entryBefore = e.store.readManifest().last
+    val seenPathsBefore = e.store.pathsOf(entryBefore, "seen_paths")
+    val bloomPathsBefore = e.store.pathsOf(entryBefore, "bloom_paths")
     val host = graft.urls.UrlCanon.hostOf(before.values.head._1)
     val n = e.retireHost(host)
     assert(n > 0)
@@ -296,10 +318,13 @@ class CrawlEngineSpec extends SparkTestBase {
     // the retire wrote a tombstone delta — it did NOT rewrite the seen
     // base or the bloom shards (blooms can't delete; exactness comes from
     // the tombstone mask in the anti-join chain)
-    assert(e.store.liveSeenPaths() == seenPathsBefore, "seen base was rewritten")
-    assert(e.store.liveBloomPaths().toSeq == bloomPathsBefore, "bloom shards were rewritten")
-    assert(e.store.liveTombstonePaths().nonEmpty)
-    val reader = new graft.crawl.BloomShardReader(e.store.liveBloomPaths(), e.store.confSer)
+    val entryAfter = e.store.readManifest().last
+    assert(e.store.pathsOf(entryAfter, "seen_paths") == seenPathsBefore, "seen base was rewritten")
+    assert(e.store.pathsOf(entryAfter, "bloom_paths") == bloomPathsBefore,
+      "bloom shards were rewritten")
+    assert(e.store.pathsOf(entryAfter, "tombstone_paths").nonEmpty)
+    val reader = new graft.crawl.BloomShardReader(
+      e.store.pathsOf(entryAfter, "bloom_paths").toArray, e.store.confSer)
     after.keys.foreach(h => assert(reader.mightContain(h), "false negative after retire"))
   }
 

@@ -69,7 +69,7 @@ class DriverKillSpec extends SparkTestBase {
     p.destroyForcibly()
     p.waitFor(30, TimeUnit.SECONDS)
     assert(roundsAtKill >= killAt, s"kill raced the poll: $roundsAtKill rounds")
-    val seenFilesAtKill = store.liveSeenPaths().size
+    val seenFilesAtKill = store.pathsOf(store.readManifest().last, "seen_paths").size
 
     // a fresh "driver" (this JVM) resumes over the snapshot root
     val engine = new CrawlEngine(spark, fixtureDir, snap, cfg)

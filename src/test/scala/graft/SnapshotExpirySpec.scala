@@ -1,7 +1,7 @@
 package graft
 
 import graft.corpus.CorpusGen
-import graft.crawl.{CrawlConfig, CrawlEngine, SnapshotStore}
+import graft.crawl.{CrawlConfig, CrawlEngine, SnapshotHistory, SnapshotStore}
 import graft.oracle.CrawlOracle
 import org.apache.hadoop.fs.Path
 
@@ -98,7 +98,7 @@ class SnapshotExpirySpec extends SparkTestBase {
     // fetchlog of round r holds the fetches performed DURING round r
     // (committed by round r+1's entry, which carries its unique path);
     // capture the dirs pre-expiry
-    val logDirs = store.readManifest().map(store.fetchLogPathOf).filter(store.exists)
+    val logDirs = store.fetchLogsOf(store.readManifest()).flatten
     assert(logDirs.nonEmpty)
     val entry0 = store.entryFor(0).get
     val frontier0 = store.frontierPathOf(entry0)
@@ -124,10 +124,12 @@ class SnapshotExpirySpec extends SparkTestBase {
 
     // every live reference still exists (incl. bloom shard files whose
     // current version lives under an OLD round's blooms dir)
-    store.liveSeenPaths().foreach(p => assert(store.exists(p), s"live seen path expired: $p"))
-    store.liveBloomPaths().filter(_ != null)
+    val live = store.readManifest().last
+    store.pathsOf(live, "seen_paths")
+      .foreach(p => assert(store.exists(p), s"live seen path expired: $p"))
+    store.pathsOf(live, "bloom_paths").filter(_ != null)
       .foreach(p => assert(store.exists(p), s"live bloom shard expired: $p"))
-    assert(store.exists(store.liveHostReadyPath()))
+    assert(store.exists(store.hostReadyPathOf(live)))
   }
 
   test("resume after mid-crawl expiry completes byte-identically to the " +
@@ -169,8 +171,9 @@ class SnapshotExpirySpec extends SparkTestBase {
     assert(deleted > 0)
     // the retire round's manifest points at live tombstones and at the
     // PARENT round's host-ready file — both must survive expiry
-    e.store.liveTombstonePaths().foreach(p => assert(e.store.exists(p)))
-    assert(e.store.exists(e.store.liveHostReadyPath()))
+    val live = e.store.readManifest().last
+    e.store.pathsOf(live, "tombstone_paths").foreach(p => assert(e.store.exists(p)))
+    assert(e.store.exists(e.store.hostReadyPathOf(live)))
     assert(collectSeen(e.seen()) == seenBefore)
     assert(!seenBefore.values.exists { case (u, _) => graft.urls.UrlCanon.hostOf(u) == h })
   }
@@ -225,5 +228,67 @@ class SnapshotExpirySpec extends SparkTestBase {
     assert(store.exists(store.frontierPathOf(store.entryFor(last - 1).get)))
     assert(store.exists(store.frontierPathOf(store.entryFor(last).get)))
     intercept[IllegalArgumentException] { store.expireRounds(keepLast = 0) }
+  }
+
+  test("a pre-pointer store fails loudly at resume, retire and expiry, " +
+      "touching nothing; history still reads it with null pointers") {
+    val root = snapDir("pre-pointer")
+    val store = new SnapshotStore(root, spark.sparkContext.hadoopConfiguration)
+    store.wipe()
+    // the layout stores written before the pointer-carrying format used:
+    // fixed per-round dir names, and entries without frontier_path,
+    // hostready_path or fetchlog_path
+    def dir(r: Int, kind: String): String = {
+      val p = s"${store.roundDir(r)}/$kind"
+      store.touch(s"$p/part-00000.snappy.parquet")
+      p
+    }
+    for (r <- 0 to 1; kind <- Seq("frontier", "hostready")) dir(r, kind)
+    dir(0, "fetchlog")
+    val seen = Seq(dir(0, "seen_delta"), dir(1, "seen_delta"))
+    val noShards = Seq.fill[String](cfg.partitions)(null)
+    val lineage = Seq.fill(cfg.partitions)(0L)
+    for (r <- 0 to 1)
+      store.commit(store.entryJson(r, r - 1, Map("frontier" -> 1L), lineage,
+        Map("fetched_total" -> r.toDouble), seen.take(r + 1), noShards, cfg.partitions))
+    def files(): Seq[String] = {
+      val it = store.fs.listFiles(new Path(store.root), true)
+      val out = Seq.newBuilder[String]
+      while (it.hasNext) out += it.next().getPath.toString
+      out.result().sorted
+    }
+    val before = files()
+    def refused(what: String, field: String)(op: => Any): Unit = {
+      val ex = intercept[IllegalStateException](op)
+      assert(ex.getMessage.contains(field) && ex.getMessage.contains("predates"),
+        s"$what: ${ex.getMessage}")
+    }
+    val e = new CrawlEngine(spark, fixtureDir, root, cfg)
+    refused("resume", "frontier_path")(e.resume())
+    refused("retireHost", "frontier_path")(e.retireHost("h0.example"))
+    refused("hostReadyPathOf", "hostready_path")(
+      store.hostReadyPathOf(store.readManifest().last))
+    refused("expireRounds", "frontier_path")(
+      store.expireRounds(keepLast = 1, removeOrphans = true))
+    assert(files() == before, "a refused operation changed the store")
+    assert(store.committedRounds() == Seq(0, 1))
+
+    val h = SnapshotHistory(spark, store)
+      .select("round", "hostready_path", "frontier_path", "fetchlog_path").collect()
+    assert(h.map(_.getInt(0)).toSeq == Seq(0, 1))
+    assert(h.forall(r => (1 to 3).forall(r.isNullAt)), h.mkString("; "))
+
+    // a pointer-carrying round on top still leaves rounds 0-1 unreadable:
+    // their logs sit at fixed names no entry points at, so an orphan
+    // sweep would delete crawl output — expiry refuses before deleting
+    store.commit(store.entryJson(2, 1, Map("frontier" -> 1L), lineage,
+      Map("fetched_total" -> 2.0), seen, noShards, cfg.partitions,
+      hostReadyPath = Some(dir(2, "hostready-0a0a0a0a")),
+      frontierPath = Some(dir(2, "frontier-0a0a0a0a")),
+      fetchLogPath = Some(dir(1, "fetchlog-0a0a0a0a"))))
+    val upgraded = files()
+    refused("expireRounds over a mixed store", "frontier_path")(
+      store.expireRounds(keepLast = 1, removeOrphans = true))
+    assert(files() == upgraded, "expiry deleted files before refusing")
   }
 }

@@ -51,6 +51,10 @@ class SnapshotStoreSpec extends AnyFunSuite {
     c
   }
 
+  /** The seen paths of the last committed entry. */
+  private def liveSeen(store: SnapshotStore): Seq[String] =
+    store.pathsOf(store.readManifest().last, "seen_paths")
+
   private def entry(store: SnapshotStore, round: Int, seenPaths: Seq[String]): String =
     store.entryJson(round, round - 1, Map("frontier" -> 10L, "seen_delta" -> 5L),
       Seq(2L, 3L), Map("fetched_total" -> (round * 10).toDouble), seenPaths,
@@ -65,7 +69,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     (0 to 3).foreach(r => store.commit(entry(store, r, Seq(s"$root/round=$r/seen_delta"))))
     assert(store.committedRounds() == Seq(0, 1, 2, 3))
     assert(store.lastCommitted().contains(3))
-    assert(store.liveSeenPaths() == Seq(s"$root/round=3/seen_delta"))
+    assert(liveSeen(store) == Seq(s"$root/round=3/seen_delta"))
     assert(store.readManifest().last("partitions") == 2)
     assert(store.metricOf(store.readManifest().last, "fetched_total") == 30.0)
     assert(!store.fs.exists(new Path(store.root, "manifest.jsonl")),
@@ -203,8 +207,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val round1 = dir.listFiles().map(_.getName).filter(_.startsWith("r000000001"))
     assert(round1.toSeq == Seq("r000000001.json"), round1.mkString(", "))
     assert(store.committedRounds() == Seq(0, 1))
-    assert(new SnapshotStore(root, confWith())
-      .liveSeenPaths() == Seq(s"$root/round=1/competitor"))
+    assert(liveSeen(new SnapshotStore(root, confWith())) == Seq(s"$root/round=1/competitor"))
   }
 
   test("log mode: a crashed committer's torn entry squatting on the round is " +
@@ -224,8 +227,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     }
     try store.commit(entry(store, 1, Seq(s"$root/round=1/ours")))
     finally store.beforeLogCreate = () => ()
-    assert(new SnapshotStore(root, confWith())
-      .liveSeenPaths() == Seq(s"$root/round=1/ours"))
+    assert(liveSeen(new SnapshotStore(root, confWith())) == Seq(s"$root/round=1/ours"))
 
     // live-writer case: the occupant's torn entry COMPLETES inside the
     // retry window (a slow competitor, not a crashed one) — we must lose,
@@ -255,8 +257,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
         store2.commit(entry(store2, 1, Seq(s"$root2/round=1/loser")))
       }
     } finally store2.beforeLogCreate = () => ()
-    assert(new SnapshotStore(root2, confWith())
-      .liveSeenPaths() == Seq(s"$root2/round=1/competitor"))
+    assert(liveSeen(new SnapshotStore(root2, confWith())) == Seq(s"$root2/round=1/competitor"))
   }
 
   test("log mode: a committer stalled past the takeover gate mid-commit is " +
@@ -291,7 +292,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(outcome.get() != null &&
       outcome.get().isInstanceOf[CommitConflictException],
       s"stalled committer must lose via read-back, got ${outcome.get()}")
-    assert(new SnapshotStore(root, conf).liveSeenPaths() ==
+    assert(liveSeen(new SnapshotStore(root, conf)) ==
       Seq(s"$root/round=1/reclaimed"),
       "readers must resolve the reclaimer's entry")
   }
@@ -325,7 +326,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val store = new SnapshotStore(root, conf)
     val reader = new SnapshotStore(root, conf) // long-lived dashboard
     store.commit(entry(store, 0, Seq(s"$root/old-table/round=0/seenX")))
-    assert(reader.liveSeenPaths() == Seq(s"$root/old-table/round=0/seenX"))
+    assert(liveSeen(reader) == Seq(s"$root/old-table/round=0/seenX"))
     val entryPath = new Path(s"$root/manifest.d/r000000000.json")
     val oldStatus = store.fs.getFileStatus(entryPath)
     store.wipe()
@@ -337,36 +338,8 @@ class SnapshotStoreSpec extends AnyFunSuite {
     store.fs.setTimes(entryPath, oldStatus.getModificationTime, -1)
     assert(store.fs.getFileStatus(entryPath).getLen == oldStatus.getLen,
       "test setup: entry lengths must collide for the scenario to bite")
-    assert(reader.liveSeenPaths() == Seq(s"$root/new-table/round=0/seenY"),
+    assert(liveSeen(reader) == Seq(s"$root/new-table/round=0/seenY"),
       "reader served the dead table's cached entry despite the marker")
-  }
-
-  test("fetch-log resolution: a conventional dir superseded by a unique-path " +
-      "rerun is excluded as pre-upgrade crash debris; a proper old-format " +
-      "log still resolves") {
-    val root = freshDir("logdebris")
-    val store = new SnapshotStore(root,
-      confWith())
-    val fs = store.fs
-    def e(r: Int, logP: Option[String]) = store.entryJson(
-      r, r - 1, Map("fetchlog" -> 3L), Seq(1L), Map.empty, Seq.empty,
-      fetchLogPath = logP)
-    // old-format history: entries 0..1 pre-pointer. Round 0's
-    // conventional log was committed properly (old engine), round 1's was
-    // written by an attempt that crashed BEFORE committing entry 2
-    store.commit(e(0, None))
-    store.commit(e(1, None))
-    fs.mkdirs(new Path(store.fetchLogPath(0))) // proper old-format log
-    fs.mkdirs(new Path(store.fetchLogPath(1))) // crashed attempt's debris
-    // the upgraded engine re-ran round 1 under the unique data plane
-    // (which no longer overwrites the conventional dir) and committed
-    // entry 2 pointing at the unique-path log under the SAME round dir
-    val uniqueLog = store.uniquePath(1, "fetchlog")
-    fs.mkdirs(new Path(uniqueLog))
-    store.commit(e(2, Some(uniqueLog)))
-    val resolved = store.fetchLogsOf(store.readManifest()).flatten
-    assert(resolved == Seq(store.fetchLogPath(0), uniqueLog),
-      s"round 1's debris must be excluded, round 0's real log kept: $resolved")
   }
 
   test("idempotent retry: re-committing the byte-identical winning entry " +
@@ -391,13 +364,13 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val store = new SnapshotStore(root, conf)
     val reader = new SnapshotStore(root, conf) // long-lived dashboard
     store.commit(entry(store, 0, Seq(s"$root/old-table/round=0/seen")))
-    assert(reader.liveSeenPaths() == Seq(s"$root/old-table/round=0/seen")) // warm its cache
+    assert(liveSeen(reader) == Seq(s"$root/old-table/round=0/seen")) // warm its cache
     // new table at the same root: round 0's entry name is REUSED
     store.wipe()
     store.commit(entry(store, 0, Seq(s"$root/new-table/round=0/seen")))
-    assert(store.liveSeenPaths() == Seq(s"$root/new-table/round=0/seen"),
+    assert(liveSeen(store) == Seq(s"$root/new-table/round=0/seen"),
       "the wiping instance served the dead table's cached entry")
-    assert(reader.liveSeenPaths() == Seq(s"$root/new-table/round=0/seen"),
+    assert(liveSeen(reader) == Seq(s"$root/new-table/round=0/seen"),
       "a reader in another 'process' served the dead table's cached entry")
   }
 
