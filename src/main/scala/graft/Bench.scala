@@ -2,7 +2,6 @@ package graft
 
 import graft.corpus.CorpusGen
 import graft.crawl.SnapshotStore
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entry (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS] and prints ONE JSON
@@ -15,16 +14,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus.toString, cpus)
 
     // fixture generation is input preparation, not engine work — untimed.
     // Same for the bucketed static-input layouts the crawl joins against:
@@ -35,7 +26,7 @@ object Bench {
     // crawl time on any fresh checkout).
     val fx = CorpusGen.ensureFor(spark, sfDir)
     graft.crawl.CrawlEngine.prepareStaticInputs(spark, fx,
-      graft.queries.CrawlOps.crawlConfigFor(cpus.toInt, CorpusGen.tierFor(sfDir)).partitions)
+      graft.queries.CrawlOps.crawlConfigFor(cpus, CorpusGen.tierFor(sfDir)).partitions)
     // q37 pins the SMOKE tier regardless of sfDir (a second bench-tier
     // crawl per run would be waste) — prepare ITS inputs untimed too, or
     // a fresh checkout counts smoke corpus generation + first-touch
@@ -43,7 +34,7 @@ object Bench {
     if (CorpusGen.tierFor(sfDir) != CorpusGen.Smoke) {
       val fxSmoke = CorpusGen.ensure(spark, CorpusGen.Smoke)
       graft.crawl.CrawlEngine.prepareStaticInputs(spark, fxSmoke,
-        graft.queries.CrawlOps.crawlConfigFor(cpus.toInt, CorpusGen.Smoke).partitions)
+        graft.queries.CrawlOps.crawlConfigFor(cpus, CorpusGen.Smoke).partitions)
     }
 
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>

@@ -3,7 +3,6 @@ package graft
 import graft.corpus.CorpusGen
 import graft.crawl.{CrawlEngine, RobotsAllows, RobotsIndex, Scheduler}
 import graft.functions.canonicalize_url
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Shim
 import org.apache.spark.storage.StorageLevel
@@ -41,35 +40,16 @@ import org.apache.spark.storage.StorageLevel
 object BenchFrontier {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val variants = sys.env.getOrElse("SPARK_GRAFT_FRONTIER_X", "40").toInt
     // sequence(0, variants-1) with variants<=0 silently yields a
     // DESCENDING [0, -1, ...] (Spark picks step -1), doubling the
     // frontier with bogus ?v=-1 URLs instead of erroring
     require(variants >= 1, s"SPARK_GRAFT_FRONTIER_X must be >= 1, got $variants")
     val buckets = sys.env.getOrElse("SPARK_GRAFT_FRONTIER_BUCKETS", "128").toInt
-    // SPARK_GRAFT_EXECUTORS=E runs the SAME round under local-cluster
-    // [E, cpus, mem] — E real executor JVMs (netty shuffle, serialized
-    // closures/broadcasts, per-JVM codegen) instead of local threads.
-    // Run at E and 4E on identical input for the N→4N EXECUTOR scaling
-    // line (BASELINE.json: efficiency = thpt_4E / (4 × thpt_E)).
-    val executors = sys.env.get("SPARK_GRAFT_EXECUTORS").map(_.toInt)
-    val execMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MB", "8192").toInt
-    val totalCores = cpus * executors.getOrElse(1)
-    val builder = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", totalCores * 4) // tasks ≫ cores
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", -1) // measure the shuffle path
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    executors match {
-      case Some(e) =>
-        builder.master(s"local-cluster[$e,$cpus,$execMb]")
-        ClusterCheck.clusterConfigs.foreach { case (k, v) => builder.config(k, v) }
-      case None => builder.master(s"local[$cpus]")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local[cpus], or local-cluster[E, cpus, mem] with SPARK_GRAFT_EXECUTORS=E
+    val bench = GraftSession.bench(partitionsPerCore = 4, // tasks ≫ cores
+      conf = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) // measure the shuffle path
+    val spark = bench.spark
 
     val fx = CorpusGen.ensureFor(spark, sfDir)
 
@@ -149,7 +129,7 @@ object BenchFrontier {
     val candCount = cand.count()
     val urlsPerSec = (allowedSize + candCount) / wallSec
     println(
-      s"""{"cpus":$cpus,"executors":${executors.getOrElse(0)},""" +
+      s"""{"cpus":${bench.coresPerExecutor},"executors":${bench.executors},""" +
         s""""sf":"$sfDir","variants":$variants,"buckets":$buckets,""" +
         s""""frontier_urls":$frontierSize,"fetched_urls":$allowedSize,""" +
         s""""candidates":$candCount,"new_urls":$newCount,""" +

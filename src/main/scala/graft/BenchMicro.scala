@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Shuffle-free CPU microbench: canonicalize+hash N synthetic URLs.
@@ -8,15 +7,10 @@ import org.apache.spark.sql.functions._
   * BENCH/BASELINE.md to attribute the local-mode scaling ceiling. */
 object BenchMicro {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.cpus
     val n = sys.env.getOrElse("SPARK_GRAFT_MICRO_N", "50000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toString, cpus)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val out = spark.range(0, n, 1, cpus * 4)
       .select(xxhash64(graft.functions.canonicalize_url(

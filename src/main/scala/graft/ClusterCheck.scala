@@ -3,7 +3,6 @@ package graft
 import graft.corpus.CorpusGen
 import graft.crawl.{CrawlConfig, CrawlEngine}
 import graft.oracle.{CrawlOracle, OracleAssert}
-import graft.queries.CrawlOps
 import org.apache.spark.sql.SparkSession
 
 /** Multi-executor (multi-JVM) evidence run. `local-cluster[N,cores,mem]`
@@ -17,78 +16,23 @@ import org.apache.spark.sql.SparkSession
   * netty shuffle between executor processes, and snapshot commit/resume
   * through shared storage.
   *
-  * Modes (args: `[executors] [coresPerExec] [memMbPerExec] [mode]`):
+  * Modes (args: `[executors] [coresPerExec] [memMbPerExec] [mode]`), each
+  * run by ClusterCrawlSpec as a subprocess in `sbt test` and exiting
+  * nonzero on any mismatch:
   *  - `check` (default): Smoke-tier crawl under the cluster, asserted
   *    byte-identical to the sequential oracle (crawl order, seen set,
-  *    politeness) + a retire/re-discovery resume — exits nonzero on any
-  *    mismatch. ClusterCrawlSpec runs this as a subprocess in `sbt test`.
-  *  - `bench`: BenchCrawl's protocol under the cluster on
-  *    SPARK_GRAFT_SF_DIR; run at N and 4N executors on identical input.
-  *    N→4N executor-scaling efficiency = throughput_4N / (4 × throughput_N).
-  *    One JSON line per run.
+  *    politeness) + a retire/re-discovery resume;
+  *  - `kill`: the same crawl with one executor JVM killed mid-crawl;
+  *  - `retry`: the same crawl with every shard-build task failing once.
+  *
+  * Executor-scaling throughput is BenchCrawl's, run with
+  * SPARK_GRAFT_EXECUTORS=E.
   */
 object ClusterCheck {
 
-  /** The JDK17 modules Spark 4 needs opened — the ONE copy (review
-    * finding: the evidence specs each carried their own verbatim list, so
-    * a Spark upgrade adding one required open meant touching five files,
-    * and a missed one produced a mode-specific subprocess crash that
-    * looked like a real fault-tolerance failure). The driver JVM gets
-    * them from build.sbt javaOptions, forked executor JVMs via
-    * spark.executor.extraJavaOptions here, and the specs' subprocess
-    * drivers via the test helper GraftSubprocess. */
-  val OpenedModules: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  )
-
-  private val addOpens =
-    OpenedModules.map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-
-  /** Configs every local-cluster session needs (shared with
-    * BenchFrontier's cluster mode): executor JVMs are forked from
-    * SPARK_HOME's jars only, so the engine's own classes ship via
-    * extraClassPath (same box, shared filesystem); -Dspark.* is not
-    * allowed in executor opts, so static SQL confs go on the session. */
-  def clusterConfigs: Seq[(String, String)] = {
-    // the worker-side executor launcher resolves SPARK_HOME/jars and needs
-    // the scala version; spark-submit's shell scripts export it, a bare
-    // JVM does not — fail fast with the fix instead of a cryptic
-    // "Cannot find any build directories" from every executor fork
-    require(sys.env.contains("SPARK_SCALA_VERSION"),
-      "local-cluster mode outside spark-submit needs SPARK_SCALA_VERSION=2.13 " +
-        "in the environment (the executor launcher reads it)")
-    val classesDir = new java.io.File("target/scala-2.13/classes").getAbsolutePath
-    Seq(
-      "spark.executor.extraClassPath" -> classesDir,
-      "spark.executor.extraJavaOptions" -> addOpens,
-      // executor fork + registration takes seconds; don't let the first
-      // job start before the workers are up
-      "spark.scheduler.maxRegisteredResourcesWaitingTime" -> "60s",
-      "spark.scheduler.minRegisteredResourcesRatio" -> "1.0")
-  }
-
-  def session(executors: Int, coresPerExec: Int, memMb: Int,
-              shufflePartitions: Int,
-              extra: Seq[(String, String)] = Nil): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(s"local-cluster[$executors,$coresPerExec,$memMb]")
-      .appName("graft-cluster")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    clusterConfigs.foreach { case (k, v) => builder.config(k, v) }
-    extra.foreach { case (k, v) => builder.config(k, v) } // later wins
-    val s = builder.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(executors: Int, coresPerExec: Int, memMb: Int,
+                      conf: Seq[(String, String)] = Nil): SparkSession =
+    GraftSession.cluster(executors, coresPerExec, memMb, shufflePartitions = 8, conf)
 
   def main(args: Array[String]): Unit = {
     val executors = args.headOption.map(_.toInt).getOrElse(2)
@@ -97,10 +41,9 @@ object ClusterCheck {
     val mode = if (args.length > 3) args(3) else "check"
     mode match {
       case "check" => check(executors, coresPer, memMb)
-      case "bench" => bench(executors, coresPer, memMb)
       case "kill" => killCheck(executors, coresPer, memMb)
       case "retry" => retryCheck(executors, coresPer, memMb)
-      case other => sys.error(s"unknown mode: $other (check|bench|kill|retry)")
+      case other => sys.error(s"unknown mode: $other (check|kill|retry)")
     }
   }
 
@@ -118,7 +61,7 @@ object ClusterCheck {
     * sequential oracle. */
   private def killCheck(executors: Int, coresPer: Int, memMb: Int): Unit = {
     require(executors >= 2, "kill mode needs >= 2 executors (one survivor)")
-    val spark = session(executors, coresPer, memMb, shufflePartitions = 8)
+    val spark = session(executors, coresPer, memMb)
     try {
       val fixtureDir = CorpusGen.ensure(spark, CorpusGen.Smoke)
       val cfg = CrawlConfig(maxDepth = 10, perHostPerRound = 25, partitions = 8,
@@ -182,10 +125,9 @@ object ClusterCheck {
     * oracle. */
   private def retryCheck(executors: Int, coresPer: Int, memMb: Int): Unit = {
     val armProp = "-Dgraft.fault.arm=shards.post"
-    val spark = session(executors, coresPer, memMb, shufflePartitions = 8,
-      extra = Seq(
-        "spark.task.maxFailures" -> "4",
-        "spark.executor.extraJavaOptions" -> s"$addOpens $armProp"))
+    val spark = session(executors, coresPer, memMb, Seq(
+      "spark.task.maxFailures" -> "4",
+      "spark.executor.extraJavaOptions" -> s"${GraftSession.executorAddOpens} $armProp"))
     try {
       val injected = new java.util.concurrent.atomic.AtomicInteger(0)
       spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -216,7 +158,7 @@ object ClusterCheck {
   }
 
   private def check(executors: Int, coresPer: Int, memMb: Int): Unit = {
-    val spark = session(executors, coresPer, memMb, shufflePartitions = 8)
+    val spark = session(executors, coresPer, memMb)
     try {
       val fixtureDir = CorpusGen.ensure(spark, CorpusGen.Smoke)
       val cfg = CrawlConfig(maxDepth = 10, perHostPerRound = 25, partitions = 8,
@@ -307,40 +249,6 @@ object ClusterCheck {
         s"fetched=$fetched seen=$seen retire_resume_seen=${got2Seen.size} " +
         s"media_fetched=$fetchedM media_seen=$seenM " +
         s"rank_hosts=${gotRank.size} comp_hosts=${gotComp.size}")
-    } finally spark.stop()
-  }
-
-  private def bench(executors: Int, coresPer: Int, memMb: Int): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val totalCores = executors * coresPer
-    val spark = session(executors, coresPer, memMb, shufflePartitions = totalCores)
-    try {
-      val tier = CorpusGen.tierFor(sfDir)
-      val fx = CorpusGen.ensureFor(spark, sfDir) // untimed input preparation
-      val cfg = CrawlOps.crawlConfigFor(totalCores, tier)
-      CrawlEngine.prepareStaticInputs(spark, fx, cfg.partitions) // untimed ingest
-      val engine = new CrawlEngine(spark, fx,
-        s"target/cluster-scaling/${tier.name}-e$executors-c$coresPer", cfg)
-      val t0 = System.nanoTime()
-      engine.runFresh()
-      val wallSec = (System.nanoTime() - t0) / 1e9
-      val manifest = engine.store.readManifest()
-      def m(e: Map[String, Any], k: String): Double = engine.store.metricOf(e, k)
-      val (fetched, candidates) = engine.store.crawlTotals(manifest)
-      val bulk = manifest.filter(e => m(e, "scheduled") >= fetched * 0.02)
-      val bulkWork = bulk.map(e => m(e, "scheduled") + m(e, "candidates")).sum
-      val bulkSec = bulk.map(m(_, "round_sec")).sum
-      // -1 sentinel, not 0/0=NaN (invalid JSON — json.load would reject
-      // the whole line): no round may cross the 2% threshold, e.g. >50
-      // uniform rounds or a run where only round 0 committed
-      val steady = if (bulkSec > 0.0) bulkWork / bulkSec else -1.0
-      println(
-        s"""{"executors":$executors,"cores_per_executor":$coresPer,""" +
-          s""""sf":"$sfDir","crawl_sec":$wallSec,"fetched":$fetched,""" +
-          s""""dedup_candidates":$candidates,""" +
-          s""""urls_per_sec":${(fetched + candidates) / wallSec},""" +
-          s""""steady_rounds":${bulk.size},"steady_sec":$bulkSec,""" +
-          s""""steady_urls_per_sec":$steady}""")
     } finally spark.stop()
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.corpus.CorpusGen
 import graft.crawl.{CrawlConfig, CrawlEngine}
-import org.apache.spark.sql.SparkSession
 
 /** spark-submit entry point for the crawl itself (BASELINE.json:14
   * "launched via spark-submit"):
@@ -15,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * Environment: SPARK_GRAFT_MAX_DEPTH, SPARK_GRAFT_PER_HOST,
   * SPARK_GRAFT_BUDGET, SPARK_GRAFT_PARTITIONS override CrawlConfig.
   * Under spark-submit the session inherits the cluster master; standalone
-  * it falls back to local[all-cores].
+  * it falls back to local[SPARK_GRAFT_CPUS] (default min(32, cores)).
   */
 object CrawlMain {
   def main(args: Array[String]): Unit = {
@@ -28,23 +27,15 @@ object CrawlMain {
     require(mode == "fresh" || mode == "resume",
       s"unknown mode '$mode' — expected 'fresh' or 'resume'")
 
-    val builder = SparkSession.builder()
-      .appName("graft-crawl")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-    // under spark-submit, master comes from the launcher; MASTER env is
-    // honored for standalone java -cp launches; default local otherwise
-    if (!sys.props.contains("spark.master"))
-      sys.env.get("MASTER") match {
-        case Some(m) => builder.master(m)
-        case None =>
-          builder.master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors())}]")
-            .config("spark.sql.shuffle.partitions",
-              math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-            .config("spark.ui.enabled", "false")
+    // under spark-submit, master and settings come from the launcher;
+    // MASTER env is honored for standalone java -cp launches; default
+    // local otherwise
+    val spark =
+      if (sys.props.contains("spark.master")) GraftSession.launched(None)
+      else sys.env.get("MASTER") match {
+        case Some(m) => GraftSession.launched(Some(m))
+        case None => GraftSession.local()
       }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // the library's SQL functions (graft_canonicalize, ...) for any
     // spark.sql consumer of this session — e.g. ad-hoc queries over
     // CrawlEngine.history() or the fetch log from the same deployment

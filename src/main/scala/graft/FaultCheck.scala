@@ -3,7 +3,6 @@ package graft
 import graft.corpus.CorpusGen
 import graft.crawl.{BloomShardReader, CrawlConfig, CrawlEngine, FaultInjection}
 import graft.oracle.CrawlOracle
-import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import scala.jdk.CollectionConverters._
 
@@ -32,14 +31,9 @@ import scala.jdk.CollectionConverters._
 object FaultCheck {
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8,4]") // 4 = spark.task.maxFailures: retries enabled
-      .appName("graft-fault-check")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR") // injected failures log loudly on WARN
+    // 4 = spark.task.maxFailures: retries enabled; injected failures log
+    // loudly on WARN
+    val spark = GraftSession.local("8,4", shufflePartitions = 8, logLevel = "ERROR")
     try {
       val fixtureDir = CorpusGen.ensure(spark, CorpusGen.Smoke)
       val corpus = CorpusGen.build(CorpusGen.Smoke)

@@ -38,15 +38,9 @@ final case class CrawlConfig(
     * frontier/delta/host-ready/bloom version forever: storage
     * O(rounds × state) instead of O(live state + fetch logs). Runs on
     * the pipelined round tail right after the commit, so it costs the
-    * critical path nothing. */
+    * critical path nothing. It keeps the last two rounds fully
+    * resumable (see CrawlEngine's AutoExpireKeepLast). */
   expireEveryRounds: Int = 0,
-  /** Rounds kept fully resumable by auto-expiry. MUST be ≥ 2 inside a
-    * running crawl: the in-flight round's persisted frames (schedAll,
-    * fetched) derive from the PREVIOUS round's frontier file, and a
-    * cache-eviction recompute after an executor loss would re-scan it —
-    * keepLast=1 would have deleted it. (Offline expireRounds calls on a
-    * quiesced snapshot may use keepLast=1.) */
-  expireKeepLast: Int = 2,
   /** Per-URL priority scheduling — the "priority" half of the north
     * star's min-heap key "(host, next-fetch-time, depth/priority)",
     * realized with an actual priority signal distinct from discovery

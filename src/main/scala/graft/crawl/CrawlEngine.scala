@@ -60,7 +60,7 @@ final class CrawlEngine(
     "depth INT, round INT, rn INT, fetch_ts BIGINT, status STRING, doc_id STRING"
   private val tombSchema = "url_hash BIGINT, retire_round INT"
 
-  import CrawlEngine.{BloomFpp, SeenState, SnapshotWriteFiles}
+  import CrawlEngine.{AutoExpireKeepLast, BloomFpp, SeenState, SnapshotWriteFiles}
 
   /** Frames persisted for the engine's lifetime — released by [[close]]
     * so a finished crawl leaves no cached data behind (the round-2 q09
@@ -508,7 +508,9 @@ final class CrawlEngine(
       val allowed = allowedCache.getOrElse(allowedPrio)
 
       // W1: per-host politeness schedule (skew-safe salted rank)
-      val hostMeta = hostMetaDf(hostReadyDf)
+      // hostMeta comes straight from the host-ready snapshot (which
+      // carries delay_ms since round 3); defaults applied at use site
+      val hostMeta = hostReadyDf.select(col("host"), col("delay_ms"), col("ready_ts"))
       // NOTE on row-count metrics: rounds 2-3 rode them on Observations
       // (CollectMetrics) inside the round's plans. That is sound ONLY on
       // a single-consumer edge materialized by exactly one stage; any
@@ -861,15 +863,9 @@ final class CrawlEngine(
         roundCaches.foreach(_.unpersist())
         probeCleanup() // release the bloom probe-stage cache
         // auto-expiry (opt-in): drop superseded data files now that the
-        // round is committed and its caches are released. keepLast ≥ 2
-        // keeps the in-flight round's recompute lineage (previous
-        // frontier) on disk — see CrawlConfig.expireKeepLast.
-        if (cfg.expireEveryRounds > 0 && next % cfg.expireEveryRounds == 0) {
-          require(cfg.expireKeepLast >= 2,
-            s"expireKeepLast=${cfg.expireKeepLast}: a running crawl must " +
-              "keep >= 2 rounds (in-flight cache recompute lineage)")
-          store.expireRounds(keepLast = cfg.expireKeepLast)
-        }
+        // round is committed and its caches are released
+        if (cfg.expireEveryRounds > 0 && next % cfg.expireEveryRounds == 0)
+          store.expireRounds(keepLast = AutoExpireKeepLast)
         SeenState(paths, base, nextReader, tombPaths)
       }
       frontierReady = frontierFut
@@ -891,11 +887,6 @@ final class CrawlEngine(
       manifest.map(e => store.metricOf(e, "retired").toLong).sum
     CrawlSummary(round, fetchedSoFar, totalSeen, snapshotRoot)
   }
-
-  /** hostMeta comes straight from the host-ready snapshot (which carries
-    * delay_ms since round 3); defaults applied at use site. */
-  private def hostMetaDf(readyDf: DataFrame): DataFrame =
-    readyDf.select(col("host"), col("delay_ms"), col("ready_ts"))
 }
 
 object CrawlEngine {
@@ -907,6 +898,14 @@ object CrawlEngine {
 
   /** Target false-positive rate of every seen-filter shard. */
   private val BloomFpp = 0.01
+
+  /** Rounds auto-expiry keeps fully resumable. Must be ≥ 2 inside a
+    * running crawl: the in-flight round's persisted frames (schedAll,
+    * fetched) derive from the PREVIOUS round's frontier file, and a
+    * cache-eviction recompute after an executor loss would re-scan it —
+    * keepLast=1 would have deleted it. (Offline expireRounds calls on a
+    * quiesced snapshot may use keepLast=1.) */
+  private val AutoExpireKeepLast = 2
 
   /** Live seen-set state produced by one round's pipelined tail and
     * consumed by the next round's probe definition (threaded through the

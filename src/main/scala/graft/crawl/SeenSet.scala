@@ -6,10 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftinternal.Shim
 import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.sketch.BloomFilter
-import java.io.{BufferedInputStream, BufferedOutputStream, DataOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.util.UUID
 
 /** The URL-seen set (BASELINE.json:6): "partitioned bloom/cuckoo URL-seen
@@ -82,12 +83,18 @@ object ShardFilter {
     case k => throw new IllegalArgumentException(s"unknown seen filter kind: \"$k\"")
   }
 
-  def readFrom(in: java.io.DataInputStream): ShardFilter = in.readByte().toChar match {
-    case 'C' =>
-      val saturated = in.readBoolean()
-      new CuckooShardFilter(CuckooFilter.readFrom(in), saturated)
-    case 'B' => new BloomShardFilter(BloomFilter.readFrom(in))
-    case t => throw new IllegalStateException(s"unknown shard filter tag: $t")
+  /** Read one shard file through the Hadoop FS of its path's scheme
+    * (shared storage on a real cluster). */
+  def read(path: String, conf: Configuration): ShardFilter = {
+    val p = new HPath(path)
+    val in = new DataInputStream(new BufferedInputStream(p.getFileSystem(conf).open(p)))
+    try in.readByte().toChar match {
+      case 'C' =>
+        val saturated = in.readBoolean()
+        new CuckooShardFilter(CuckooFilter.readFrom(in), saturated)
+      case 'B' => new BloomShardFilter(BloomFilter.readFrom(in))
+      case t => throw new IllegalStateException(s"unknown shard filter tag: $t")
+    } finally in.close()
   }
 }
 
@@ -106,12 +113,8 @@ object BloomShardCache {
     val hit = cache.get(path)
     if (hit != null) return hit
     // shard files are immutable + content-unique-named, so path alone is
-    // a sound cache key; reads go through the Hadoop FS of the path's
-    // scheme (shared storage on a real cluster)
-    val p = new HPath(path)
-    val in = new java.io.DataInputStream(
-      new BufferedInputStream(p.getFileSystem(conf.value).open(p)))
-    val f = try ShardFilter.readFrom(in) finally in.close()
+    // a sound cache key
+    val f = ShardFilter.read(path, conf.value)
     cache.put(path, f)
     f
   }
@@ -152,110 +155,95 @@ object SeenSet {
 
   /** Build/merge per-shard blooms on the executors. Each group task owns
     * one shard id, folds that shard's new hashes into the previous
-    * round's file (if any) and writes the next round's file atomically
-    * (unique temp + rename — idempotent under task retry). Returns the
+    * round's file (if any) and writes the next round's file. Returns the
     * per-shard file paths of the NEW shard-set version (untouched shards
     * keep their previous file — no copying) and per-shard row counts:
     * exactly the per-partition lineage the snapshot manifest records. */
   def buildShards(spark: SparkSession, hashes: DataFrame, prev: Option[BloomShardReader],
                   outDir: String, P: Int, capacityPerShard: Long, fpp: Double,
-                  kind: String = "bloom"): (Array[String], Seq[Long]) = {
-    import spark.implicits._
-    // shard I/O goes through the Hadoop FS of outDir's scheme — shared
-    // storage on a real cluster (executors write, any executor reads);
-    // the session's hadoopConfiguration ships to the tasks serialized
-    val confSer = new HadoopConfSer(spark.sparkContext.hadoopConfiguration)
-    new HPath(outDir).getFileSystem(confSer.value).mkdirs(new HPath(outDir))
-    val bcConf = spark.sparkContext.broadcast(confSer)
-    val prevPaths: Array[String] = prev.map(_.paths).getOrElse(Array.fill[String](P)(null))
-    require(prevPaths.length == P, s"shard count changed: ${prevPaths.length} != $P")
-    val bcPrev = spark.sparkContext.broadcast(prevPaths)
-    val updated = hashes.select(col("url_hash")).as[Long]
-      .groupByKey(h => SeenSet.shardOf(h, P))
-      .mapGroups { (pid, it) =>
-        FaultInjection.maybeFail("shards.pre")
-        val fs = new HPath(outDir).getFileSystem(bcConf.value.value)
-        val prevPath = bcPrev.value(pid)
-        val bf =
-          if (prevPath != null) {
-            val pp = new HPath(prevPath)
-            val in = new java.io.DataInputStream(
-              new BufferedInputStream(fs.open(pp)))
-            try ShardFilter.readFrom(in) finally in.close()
-          } else ShardFilter.create(kind, capacityPerShard, fpp)
-        var n = 0L
-        it.foreach { h => bf.put(h); n += 1 }
-        // CONTENT-UNIQUE filename (uuid): shard files are immutable once
-        // written, so the executor-level BloomShardCache can key on path
-        // alone — a fixed name would let a same-JVM rebuild (runFresh on
-        // the same snapshotRoot) serve a stale cached filter and break
-        // the no-false-negative invariant. Write-temp-then-rename keeps a
-        // killed task from leaving a half-written file under the final
-        // name; the uuid name makes retries collision-free.
-        val name = s"shard-$pid.${UUID.randomUUID()}.bin"
-        val tmp = new HPath(s"$outDir/.$name.tmp")
-        val out = new DataOutputStream(new BufferedOutputStream(fs.create(tmp, true)))
-        try bf.writeTo(out) finally out.close()
-        require(fs.rename(tmp, new HPath(s"$outDir/$name")),
-          s"shard rename failed: $tmp -> $outDir/$name")
-        // side effect complete — a failure HERE is the hard retry case:
-        // the renamed file must stay an unreferenced orphan
-        FaultInjection.maybeFail("shards.post")
-        (pid, n, s"$outDir/$name")
-      }
-      .collect()
-    val paths = prevPaths.clone()
-    updated.foreach { case (pid, _, path) => paths(pid) = path }
-    val byPid = updated.map(t => t._1 -> t._2).toMap
-    (paths, (0 until P).map(i => byPid.getOrElse(i, 0L)))
-  }
+                  kind: String = "bloom"): (Array[String], Seq[Long]) =
+    rewriteShards(spark, hashes, prev.map(_.paths).getOrElse(Array.fill[String](P)(null)),
+      outDir, P, "shards") { (old, it) =>
+      val f = old.getOrElse(ShardFilter.create(kind, capacityPerShard, fpp))
+      it.foreach(f.put)
+      Some(f)
+    }
 
   /** DELETE `hashes` from their matching shard files (executor-side,
     * mirror of [[buildShards]]) — the cuckoo deletion path (engine
     * retireHost). Bloom shards cannot delete; callers rebuild those from
     * the surviving hashes instead. Each touched shard writes a new
-    * immutable uuid-named version; untouched shards keep their current
-    * file. A saturated cuckoo shard ignores removes (it already
-    * degraded to always-maybe — conservative, never a false negative). */
+    * immutable uuid-named version; untouched and never-written shards
+    * keep their current path. A saturated cuckoo shard ignores removes
+    * (it already degraded to always-maybe — conservative, never a false
+    * negative). */
   def retireFromShards(spark: SparkSession, hashes: DataFrame, prev: BloomShardReader,
-                       outDir: String, P: Int): Array[String] = {
+                       outDir: String, P: Int): Array[String] =
+    rewriteShards(spark, hashes, prev.paths, outDir, P, "retire") { (old, it) =>
+      old.map {
+        case c: CuckooShardFilter => it.foreach(c.remove); c
+        case bloom => bloom // cannot delete: kept as-is (caller rebuilds)
+      }
+    }._1
+
+  /** The shard-file protocol of [[buildShards]] and [[retireFromShards]],
+    * in one job: group `hashes` by shard, and for each touched shard hand
+    * its previous filter (None if never written) and its hashes to
+    * `update`; the filter `update` returns becomes the shard's next
+    * version, None leaves the shard as it was. Shard I/O goes through the
+    * Hadoop FS of outDir's scheme — shared storage on a real cluster
+    * (executors write, any executor reads); the session's
+    * hadoopConfiguration ships to the tasks serialized. The fault sites
+    * `<site>.pre` and `<site>.post` (`shards.*`, `retire.*` — armed by
+    * FaultCheck and ClusterCheck) fire before the read and after the
+    * rename. Returns the new shard-set paths and the hashes
+    * `update` consumed per shard. */
+  private def rewriteShards(spark: SparkSession, hashes: DataFrame, prevPaths: Array[String],
+                            outDir: String, P: Int, site: String)(
+      update: (Option[ShardFilter], Iterator[Long]) => Option[ShardFilter])
+      : (Array[String], Seq[Long]) = {
     import spark.implicits._
+    require(prevPaths.length == P, s"shard count changed: ${prevPaths.length} != $P")
     val confSer = new HadoopConfSer(spark.sparkContext.hadoopConfiguration)
     new HPath(outDir).getFileSystem(confSer.value).mkdirs(new HPath(outDir))
     val bcConf = spark.sparkContext.broadcast(confSer)
-    val prevPaths = prev.paths
-    require(prevPaths.length == P, s"shard count changed: ${prevPaths.length} != $P")
     val bcPrev = spark.sparkContext.broadcast(prevPaths)
     val updated = hashes.select(col("url_hash")).as[Long]
       .groupByKey(h => SeenSet.shardOf(h, P))
       .mapGroups { (pid, it) =>
-        FaultInjection.maybeFail("retire.pre")
-        val fs = new HPath(outDir).getFileSystem(bcConf.value.value)
-        val prevPath = bcPrev.value(pid)
-        if (prevPath == null) (pid, null.asInstanceOf[String]) // never written: nothing to delete
-        else {
-          val in = new java.io.DataInputStream(
-            new BufferedInputStream(fs.open(new HPath(prevPath))))
-          val bf = try ShardFilter.readFrom(in) finally in.close()
-          bf match {
-            case c: CuckooShardFilter => it.foreach(c.remove)
-            case _ => it.foreach(_ => ()) // bloom: keep as-is (caller rebuilds)
-          }
-          val name = s"shard-$pid.${UUID.randomUUID()}.bin"
-          val tmp = new HPath(s"$outDir/.$name.tmp")
-          val out = new DataOutputStream(new BufferedOutputStream(fs.create(tmp, true)))
-          try bf.writeTo(out) finally out.close()
-          require(fs.rename(tmp, new HPath(s"$outDir/$name")),
-            s"shard rename failed: $tmp -> $outDir/$name")
-          // retry-after-side-effect case, mirror of buildShards
-          FaultInjection.maybeFail("retire.post")
-          (pid, s"$outDir/$name")
+        FaultInjection.maybeFail(s"$site.pre")
+        val conf = bcConf.value.value
+        var n = 0L
+        val counted = it.map { h => n += 1; h }
+        update(Option(bcPrev.value(pid)).map(ShardFilter.read(_, conf)), counted) match {
+          case None => (pid, n, null: String)
+          case Some(f) =>
+            // CONTENT-UNIQUE filename (uuid): shard files are immutable
+            // once written, so the executor-level BloomShardCache can key
+            // on path alone — a fixed name would let a same-JVM rebuild
+            // (runFresh on the same snapshotRoot) serve a stale cached
+            // filter and break the no-false-negative invariant.
+            // Write-temp-then-rename keeps a killed task from leaving a
+            // half-written file under the final name; the uuid name makes
+            // retries collision-free.
+            val fs = new HPath(outDir).getFileSystem(conf)
+            val name = s"shard-$pid.${UUID.randomUUID()}.bin"
+            val tmp = new HPath(s"$outDir/.$name.tmp")
+            val out = new DataOutputStream(new BufferedOutputStream(fs.create(tmp, true)))
+            try f.writeTo(out) finally out.close()
+            require(fs.rename(tmp, new HPath(s"$outDir/$name")),
+              s"shard rename failed: $tmp -> $outDir/$name")
+            // side effect complete — a failure HERE is the hard retry
+            // case: the renamed file must stay an unreferenced orphan
+            FaultInjection.maybeFail(s"$site.post")
+            (pid, n, s"$outDir/$name")
         }
       }
       .collect()
     val paths = prevPaths.clone()
-    updated.foreach { case (pid, path) => if (path != null) paths(pid) = path }
-    paths
+    updated.foreach { case (pid, _, path) => if (path != null) paths(pid) = path }
+    val byPid = updated.map(t => t._1 -> t._2).toMap
+    (paths, (0 until P).map(i => byPid.getOrElse(i, 0L)))
   }
 
   /** The ONE implementation of the round-aware retire mask: `seen` rows

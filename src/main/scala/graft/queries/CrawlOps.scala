@@ -49,6 +49,18 @@ object CrawlOps {
       bloomShardCapacity = math.max(100000L, tier.docs.toLong))
   }
 
+  /** A fresh crawl of `tier`'s fixture under `root/<tier>`, returned as
+    * its global fetch log in crawl order. */
+  private def crawlFetchLog(s: SparkSession, tier: CorpusGen.Tier, root: String,
+                            cfg: CrawlConfig): DataFrame = {
+    val engine = new CrawlEngine(s, CorpusGen.ensure(s, tier), s"$root/${tier.name}", cfg)
+    engine.runFresh()
+    engine.close() // release hosting/docs/robots caches (fetchLog reads parquet)
+    engine.fetchLog()
+      .select("seq", "url_canon", "host", "depth", "round", "fetch_ts", "status", "doc_id")
+      .orderBy("seq")
+  }
+
   /** Span-order-preserving packed text (newline-joined text spans in
     * span order — the [PINNED] per-row invariant), shared by q53 and
     * the q60 crawl-curation pipeline. */
@@ -166,15 +178,9 @@ object CrawlOps {
 
     // E1 flagship: the full crawl; returns the global fetch log
     "q09_crawl" -> ((s, dir) => {
-      val d = fx(s, dir)
       val tier = CorpusGen.tierFor(dir)
-      val cfg = crawlConfigFor(s.sessionState.conf.numShufflePartitions, tier)
-      val engine = new CrawlEngine(s, d, s"target/crawl-run/${tier.name}", cfg)
-      engine.runFresh()
-      engine.close() // release hosting/docs/robots caches (fetchLog reads parquet)
-      engine.fetchLog()
-        .select("seq", "url_canon", "host", "depth", "round", "fetch_ts", "status", "doc_id")
-        .orderBy("seq")
+      crawlFetchLog(s, tier, "target/crawl-run",
+        crawlConfigFor(s.sessionState.conf.numShufflePartitions, tier))
     }),
 
     // E1 media-follow variant: the crawl with media_ref spans enqueued
@@ -185,36 +191,20 @@ object CrawlOps {
     // not need a second bench-tier crawl in every Bench run. The DuckDB
     // oracle reads the golden fixture GoldenOracles writes from the
     // sequential CrawlOracle run with the same config.
-    "q37_media_crawl" -> ((s, dir) => {
-      val tier = CorpusGen.Smoke
-      val d = CorpusGen.ensure(s, tier)
-      val cfg = crawlConfigFor(s.sessionState.conf.numShufflePartitions, tier)
-        .copy(followMedia = true)
-      val engine = new CrawlEngine(s, d, s"target/crawl-run-media/${tier.name}", cfg)
-      engine.runFresh()
-      engine.close()
-      engine.fetchLog()
-        .select("seq", "url_canon", "host", "depth", "round", "fetch_ts", "status", "doc_id")
-        .orderBy("seq")
-    }),
+    "q37_media_crawl" -> ((s, _) =>
+      crawlFetchLog(s, CorpusGen.Smoke, "target/crawl-run-media",
+        crawlConfigFor(s.sessionState.conf.numShufflePartitions, CorpusGen.Smoke)
+          .copy(followMedia = true))),
 
     // E1 priority variant: the crawl under per-URL URL-length priority
     // (CrawlConfig.priorityByUrlLen — the north star's "depth/priority"
     // min-heap key with a real priority signal: shorter URLs fetch
     // first within each host). Smoke tier + golden fixture, same wiring
     // rationale as q37.
-    "q51_priority_crawl" -> ((s, dir) => {
-      val tier = CorpusGen.Smoke
-      val d = CorpusGen.ensure(s, tier)
-      val cfg = crawlConfigFor(s.sessionState.conf.numShufflePartitions, tier)
-        .copy(priorityByUrlLen = true)
-      val engine = new CrawlEngine(s, d, s"target/crawl-run-prio/${tier.name}", cfg)
-      engine.runFresh()
-      engine.close()
-      engine.fetchLog()
-        .select("seq", "url_canon", "host", "depth", "round", "fetch_ts", "status", "doc_id")
-        .orderBy("seq")
-    }),
+    "q51_priority_crawl" -> ((s, _) =>
+      crawlFetchLog(s, CorpusGen.Smoke, "target/crawl-run-prio",
+        crawlConfigFor(s.sessionState.conf.numShufflePartitions, CorpusGen.Smoke)
+          .copy(priorityByUrlLen = true))),
 
     // THE product path, end-to-end (q60): the crawl's OWN fetch log →
     // span-order packing (q53's packedTextCol) → MinHash+LSH near-dup

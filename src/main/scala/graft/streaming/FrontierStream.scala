@@ -35,11 +35,10 @@ object FrontierStream {
     * provider the blob is still one value — an OOM/latency cliff at the
     * 10^7+-URL scale this module claims (round-3 review). Per-key state
     * is what the state store is built to scale: point lookups/puts,
-    * incremental checkpoints. `shards` is kept for API compatibility and
-    * the state-store partition count is Spark's shuffle partitioning of
-    * the url_hash key — the same pmod co-location idea, handled by the
-    * framework. */
-  def dedupStream(spark: SparkSession, discoveries: Dataset[Discovery], shards: Int): Dataset[NewUrl] = {
+    * incremental checkpoints. The state-store partition count is Spark's
+    * shuffle partitioning of the url_hash key — the same pmod co-location
+    * idea, handled by the framework. */
+  def dedupStream(spark: SparkSession, discoveries: Dataset[Discovery]): Dataset[NewUrl] = {
     import spark.implicits._
     discoveries
       .groupByKey(_.url_hash)

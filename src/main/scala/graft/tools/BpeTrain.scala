@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Offline BPE trainer — run ONCE, output committed as the pinned
@@ -27,10 +26,7 @@ object BpeTrain {
     val docs = if (args.length > 0) args(0) else "/root/testdata/sf0.001/documents.parquet"
     val nMerges = if (args.length > 1) args(1).toInt else 48
     val out = if (args.length > 2) args(2) else "src/main/resources/graft/bpe_merges.tsv"
-    val spark = SparkSession.builder().master("local[8]").appName("bpe-train")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = graft.GraftSession.local("8", shufflePartitions = 8)
     try {
       val wc: Seq[(String, Long)] = spark.read.parquet(docs)
         .select(explode(regexp_extract_all(lower(col("text")), lit("[a-z0-9]+"), lit(0))).as("w"))

@@ -15,7 +15,7 @@ class FrontierStreamSpec extends SparkTestBase {
   test("streaming seen-set dedup emits each URL exactly once across batches") {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[Discovery]
-    val deduped = FrontierStream.dedupStream(spark, input.toDS(), shards = 4)
+    val deduped = FrontierStream.dedupStream(spark, input.toDS())
     val query = deduped.writeStream
       .format("memory").queryName("dedup_out")
       .outputMode(OutputMode.Append())
@@ -126,7 +126,7 @@ class FrontierStreamSpec extends SparkTestBase {
         .option("maxFilesPerTrigger", "1") // several micro-batches per phase
         .parquet(s"${srcDir.getAbsolutePath}/*")
         .as[Discovery]
-      FrontierStream.dedupStream(spark, src, shards = 4)
+      FrontierStream.dedupStream(spark, src)
         .writeStream
         .format("parquet")
         .option("path", outDir)

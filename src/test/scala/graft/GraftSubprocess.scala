@@ -6,12 +6,12 @@ package graft
   * suite shares SparkTestBase's local[8] session — and each used to carry
   * its own verbatim copy of the JDK17 --add-opens list + ProcessBuilder
   * wiring + log-tail helper (review finding). The module list itself
-  * lives in [[ClusterCheck.OpenedModules]], next to its executor-opts
+  * lives in [[GraftSession.OpenedModules]], next to its executor-opts
   * twin. */
 object GraftSubprocess {
 
   private val addOpens: Seq[String] =
-    ClusterCheck.OpenedModules.flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+    GraftSession.OpenedModules.flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   /** Launch `mainClass` in a fresh JVM with this JVM's classpath, stdout
     * and stderr redirected to `log`. `env` holds extra environment
@@ -21,9 +21,7 @@ object GraftSubprocess {
             env: Map[String, String] = Map.empty): Process = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx4g", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC", "-cp", cp, mainClass) ++ args
+    val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx4g", "-cp", cp, mainClass) ++ args
     log.getParentFile.mkdirs()
     val pb = new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)

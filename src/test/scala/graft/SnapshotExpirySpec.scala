@@ -182,7 +182,7 @@ class SnapshotExpirySpec extends SparkTestBase {
       "and sheds old state as it goes") {
     val root = snapDir("auto-expire")
     val e = new CrawlEngine(spark, fixtureDir, root,
-      cfg.copy(expireEveryRounds = 3, expireKeepLast = 2))
+      cfg.copy(expireEveryRounds = 3))
     e.runFresh()
     // crawl identical to the never-expired reference
     assert(collectLog(e) == collectLog(full))
@@ -196,7 +196,7 @@ class SnapshotExpirySpec extends SparkTestBase {
     // and a resume on the auto-expired snapshot still works (no-op here —
     // frontier is empty — but it must read the live state cleanly)
     val e2 = new CrawlEngine(spark, fixtureDir, root,
-      cfg.copy(expireEveryRounds = 3, expireKeepLast = 2))
+      cfg.copy(expireEveryRounds = 3))
     e2.resume()
     assert(collectLog(e2) == collectLog(full))
   }

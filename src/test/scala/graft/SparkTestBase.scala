@@ -12,19 +12,9 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The library's SQL surface, via the public session-build hook —
-      // SqlSurfaceSpec asserts the functions resolve WITHOUT any
-      // register() call, which proves this injection path end-to-end.
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.local("8", shufflePartitions = 8,
+    // The library's SQL surface, via the public session-build hook —
+    // SqlSurfaceSpec asserts the functions resolve WITHOUT any
+    // register() call, which proves this injection path end-to-end.
+    conf = Seq("spark.sql.extensions" -> "graft.GraftExtensions"))
 }
